@@ -1,17 +1,27 @@
 """The distributed crawl engine: iterative DataFrame jobs per crawl round.
 
-Spark lifecycle per round (SURVEY §3, north-star design)::
+Each round is split into a CRITICAL PATH, which the next round's dequeue
+needs, and a BACKGROUND TAIL, which only durability and the next round's
+Bloom probe need (SURVEY §3, north-star design)::
 
-    frontier dequeue (ORDER BY priority DESC, discovery_seq ASC LIMIT B)
-      → per-host politeness schedule (applyInPandas groups)
-      → synthetic fetch (broadcast batch ⋈ page store; HTTP mapInPandas in prod)
-      → Arrow-batched parse/analyze UDF (links, metatags, headings, mixed)
+    critical path (driver thread)
+      frontier dequeue (ORDER BY priority DESC, discovery_seq ASC LIMIT B)
+      → per-host politeness schedule + salted host repartition
+      → fetch (broadcast batch ⋈ page store; HTTP mapInPandas in LIVE mode)
+        fused with the Arrow-batched parse/analyze UDF
       → candidate links: posexplode → within-round first-occurrence dedup
-      → Bloom prune + exact anti-join vs seen (J1)
-      → robots admission (allow-all default = reference parity)
+      → JOIN 1: the previous round's Bloom insert (or this round's
+        activation backfill, started at round start)
+      → admission: Bloom probe + exact anti-join vs seen (J1), robots
       → deterministic discovery_seq assignment
-      → frontier/seen merge + results/filtered/metrics append
-      → (optional) snapshot commit for bit-identical resume
+      → in-memory frontier/seen merge (lazy unions over pinned inputs)
+      → JOIN 2: the previous round's snapshot publish
+    background tail (overlaps the next round's dequeue and fetch+parse)
+      Bloom insert of the round's new urls, whose filter-manifest save
+        also records covered_round
+      snapshot publish: results + robots writes, the frontier snapshot
+        (the round's MERGE result), fast-append seen, then commit_round
+    run() returns only after both tails of the last round are joined.
 
 The driver loop is the only imperative control flow (BFS round barriers are
 batch-synchronous by nature — reference: core/crawler.py:61-93). Crawl order
@@ -26,8 +36,8 @@ from __future__ import annotations
 
 import logging
 import os
-import threading
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -121,6 +131,8 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def _seed_frontier(self) -> tuple[DataFrame, DataFrame, int]:
+        import pandas as pd
+
         from .functions.urlnorm import (
             canonicalize_url,
             filter_reason,
@@ -128,7 +140,7 @@ class CrawlEngine:
             url_md5,
         )
         raw_seeds = self.config.seed_urls or [self.config.seed_url]
-        rows, seen_rows, registered = [], [], set()
+        seeds, prios, registered = [], [], set()
         for raw in raw_seeds:
             seed = canonicalize_url(raw, None, self.base_domain)
             if seed is None or filter_reason(seed):
@@ -138,20 +150,30 @@ class CrawlEngine:
             if seed in registered:
                 continue
             registered.add(seed)
+            seeds.append(seed)
             # single-seed reference behavior: priority=True in smart mode
             # (crawler.py:294); multi-seed: classify by pattern
             if self.config.seed_urls:
-                prio = 1 if (self.config.smart and is_priority(
-                    seed, self.config.priority_patterns)) else 0
+                prios.append(1 if (self.config.smart and is_priority(
+                    seed, self.config.priority_patterns)) else 0)
             else:
-                prio = 1 if self.config.smart else 0
-            rows.append((seed, 0, prio, len(rows), 0))
-            seen_rows.append((seed, url_md5(seed)))
-        if not rows:
+                prios.append(1 if self.config.smart else 0)
+        if not seeds:
             raise ValueError("no admissible seed URLs")
-        frontier = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        seen = self.spark.createDataFrame(seen_rows, SEEN_SCHEMA)
-        return frontier, seen, len(rows)
+        # built from pandas, so the rows cross to the JVM as Arrow batches:
+        # pinning 400 seeds took a median 417 ms from a Python-list
+        # createDataFrame and 106 ms this way (local[3], 4-core VM)
+        n = len(seeds)
+        zeros = pd.Series(0, index=range(n), dtype="int32")
+        frontier = self.spark.createDataFrame(pd.DataFrame({
+            "url": seeds, "depth": zeros,
+            "priority": pd.Series(prios, dtype="int32"),
+            "discovery_seq": pd.Series(range(n), dtype="int64"),
+            "round_added": zeros}), FRONTIER_SCHEMA)
+        seen = self.spark.createDataFrame(pd.DataFrame({
+            "url": seeds, "url_md5": [url_md5(u) for u in seeds]}),
+            SEEN_SCHEMA)
+        return frontier, seen, n
 
     def _fetch(self, batch: DataFrame) -> DataFrame:
         """Synthetic fetch, found rows only: broadcast the (small) batch into
@@ -377,12 +399,41 @@ class CrawlEngine:
     def _filter_covered_round(self) -> int:
         """Last round whose urls the seen filter is KNOWN to contain
         (persisted in the filter's own manifest counters, so it rides
-        the same atomic save as ``n_inserted``). -1 = unknown/none."""
+        the same atomic save as ``n_inserted``). -1 = unknown/none.
+
+        It is the only filter state resume trusts. The background insert
+        (``add_urls(..., covered_round=r)``) sets it only once round r's
+        urls are in: a crash before that leaves it behind the manifest and
+        the filter is rebuilt. A mark AHEAD of the manifest (insert done,
+        commit not) only adds false positives, which the exact anti-join
+        absorbs."""
         return int(self.bloom.meta.counters.get("covered_round", -1))
 
-    def _mark_filter_covered(self, round_id: int) -> None:
-        self.bloom.meta.counters["covered_round"] = round_id
-        self.bloom.meta.save()
+    def _publish_round(self, round_id: int, result: DataFrame,
+                       frontier: DataFrame, seen: DataFrame,
+                       new_seen: DataFrame, robots: DataFrame | None,
+                       counters: dict) -> None:
+        """Background tail, part 2: write every table of ``round_id``, then
+        commit it — the commit marker is the round's durability point, so
+        it must come after the last write. ``frontier`` is the round's
+        MERGE INTO result (dequeued batch deleted, new links inserted),
+        already computed in memory. ``seen`` is fast-appended: only this
+        round's ``new_seen`` is written (round 0, having no parent
+        snapshot, writes the whole seed + round-0 set). Cooperative writers
+        stage plain full snapshots instead, which their commit promotes."""
+        store = self.store
+        store.write("results", result, round_id)
+        if robots is not None:
+            store.write("robots", robots, round_id)
+        store.write("frontier", frontier, round_id)
+        if store.writer_id is not None:
+            store.write("seen", seen, round_id)
+        elif round_id == 0:
+            store.append("seen", seen, round_id)
+        else:
+            store.append("seen", new_seen, round_id,
+                         parent_round=round_id - 1)
+        store.commit_round(round_id, counters)
 
     # ------------------------------------------------------------------
     def _load_committed_state(self) -> dict:
@@ -431,7 +482,16 @@ class CrawlEngine:
         With ``config.writer_id`` set (cooperative mode) the engine JOINS
         the shared crawl: it resumes from the committed round if one
         exists, commits rounds synchronously, and on losing a commit race
-        aborts its staged round and rebases onto the winner's state."""
+        aborts its staged round and rebases onto the winner's state.
+
+        The round tails run on two background threads (filter insert,
+        snapshot publish). Leaving the pool waits for both, so a failing
+        round never returns with a tail still writing; a tail's own error
+        re-raises at its join point."""
+        with ThreadPoolExecutor(2, thread_name_prefix="round-tail") as tail:
+            return self._run(resume, tail)
+
+    def _run(self, resume: bool, tail: ThreadPoolExecutor) -> CrawlState:
         cfg = self.config
         cooperative = self.store is not None and cfg.writer_id is not None
         if cooperative:
@@ -447,16 +507,16 @@ class CrawlEngine:
         rounds: list[dict] = []
         n_parts = self.spark.sparkContext.defaultParallelism
 
-        pending_publish: tuple | None = None
+        # the in-flight tails: the filter's insert/backfill and the publish
+        filter_job: Future | None = None
+        publish_job: Future | None = None
 
-        def _join_pending() -> None:
-            nonlocal pending_publish
-            if pending_publish is not None:
-                th, errs = pending_publish
-                th.join()
-                pending_publish = None
-                if errs:
-                    raise errs[0]
+        def join(job: Future | None) -> float:
+            """Wait for ``job`` (re-raising its error); returns the wait."""
+            t = time.monotonic()
+            if job is not None:
+                job.result()
+            return time.monotonic() - t
 
         manifest = None
         if self.store is not None and (resume or cooperative):
@@ -518,7 +578,35 @@ class CrawlEngine:
 
         while frontier_count > 0 and results_count < cfg.max_urls:
             t0 = time.monotonic()
+            t_join = 0.0  # this round's waits on background tails
             budget = min(cfg.batch_size, cfg.max_urls - results_count)
+            # no count() job: the dequeue takes exactly min(budget, frontier)
+            # rows — frontier_count is exact by arithmetic (unique urls).
+            batch_count = min(budget, frontier_count)
+
+            # --- Bloom activation --------------------------------------------
+            # The Bloom prefilter is the 10^10-scale scan-saver; below the
+            # threshold its build/probe jobs cost more than the plain
+            # anti-join, so it stays cold (exactness is identical either
+            # way — the prune only bypasses join probes). Activation needs
+            # only the counters, so the backfill starts here and overlaps
+            # dequeue and fetch+parse; the probe joins it.
+            if (not bloom_active and seen_count >= cfg.bloom_min_seen
+                    and seen_count
+                    >= cfg.bloom_seen_batch_ratio * batch_count):
+                # backfill once — unless the reopened file-backed filter
+                # already carries state (resume path). A crash between the
+                # filter write and the round commit can leave the replayed
+                # round's urls pre-inserted: harmless (Bloom OR is
+                # idempotent; a cuckoo duplicate costs one slot and keeps
+                # prune exactness — false negatives remain impossible).
+                if self.bloom.n_inserted == 0:
+                    # `seen` is the state entering this round ⇒ the filter
+                    # will cover everything through round_id - 1
+                    filter_job = tail.submit(self.bloom.add_urls,
+                                             seen.select("url"),
+                                             covered_round=round_id - 1)
+                bloom_active = True
 
             # --- O1/O3: deterministic dequeue --------------------------------
             # Small budgets: TakeOrderedAndProject + one-task window (the
@@ -527,15 +615,6 @@ class CrawlEngine:
             # (priority DESC, discovery_seq ASC) order with no single
             # reducer, take rank < budget. Identical batch either way.
             dequeue_order = [F.desc("priority"), F.asc("discovery_seq")]
-            # LIVE mode fuses the whole dequeue→schedule→fetch→parse chain
-            # into ONE materialization (the result checkpoint): the fused
-            # kernel emits exactly one row per batch row, so the batch has
-            # a single consumer and needs no eager pin of its own — one
-            # driver barrier per round instead of two. Store mode keeps the
-            # pin: _fill_missing and the frontier delete re-consume the
-            # batch, and without the pin every result row would keep the
-            # full-frontier rank checkpoint alive (O(rounds × frontier)).
-            pin_batch = self.pages is not None
             undequeued = None
             if budget >= cfg.seq_window_threshold:
                 from .operators.sequence import global_sequence
@@ -561,16 +640,6 @@ class CrawlEngine:
                                      F.row_number().over(w).cast("long") - 1
                                      + F.lit(results_count).cast("long"))
                          .withColumn("round", F.lit(round_id)))
-            if pin_batch:
-                # lazy pin: the fetch stage's broadcast build is the first
-                # consumer and materializes the checkpoint inside its own
-                # job — the pin still cuts lineage and is reused by
-                # _fill_missing and the frontier delete, without paying a
-                # separate per-round driver barrier for it
-                batch = batch.localCheckpoint(eager=False)
-            # no count() job: the dequeue takes exactly min(budget, frontier)
-            # rows — frontier_count is exact by arithmetic (unique urls).
-            batch_count = min(budget, frontier_count)
             t_dequeue = time.monotonic()
 
             # --- S2: per-host politeness schedule ------------------------------
@@ -615,6 +684,16 @@ class CrawlEngine:
                 from .operators.politeness import salted_repartition
                 batch = salted_repartition(
                     batch, cfg.host_salt_buckets).drop("host_salt")
+            if self.pages is not None:
+                # Store mode reads the scheduled batch more than once: the
+                # fetch join, _fill_missing (and so every consumer of the
+                # round's result — the results write, state.results) and
+                # the frontier delete. Pinning it past the per-host window
+                # and the salt exchange keeps any of them from rerunning
+                # those. The pin is lazy: the fetch stage's broadcast build
+                # materializes it inside its own job. LIVE mode needs none
+                # — the fused kernel is the batch's only consumer.
+                batch = batch.localCheckpoint(eager=False)
 
             # --- S1: fetch + F6/F7 gates + parse/analyze -----------------------
             # ONE streamed pass over the page store: found rows are parsed and
@@ -670,6 +749,13 @@ class CrawlEngine:
             results_count += batch_count
             t_fetch = time.monotonic()
 
+            # --- JOIN 1: the probe below must see every url registered so
+            # far — wait for the previous round's insert (or this round's
+            # activation backfill)
+            t_join += join(filter_job)
+            filter_job = None
+            t_joined = time.monotonic()
+
             # --- filtered-log append (per occurrence, reference semantics) ----
             filtered_parts.append(self._filtered_from(result))
 
@@ -700,25 +786,6 @@ class CrawlEngine:
                                   "_f.parent_depth"))
 
             # --- J1: bloom prune + exact anti-join, then robots -----------------
-            # The Bloom prefilter is the 10^10-scale scan-saver; below the
-            # threshold its build/probe jobs cost more than the plain
-            # anti-join, so it stays cold (exactness is identical either
-            # way — the prune only bypasses join probes).
-            if (not bloom_active and seen_count >= cfg.bloom_min_seen
-                    and seen_count
-                    >= cfg.bloom_seen_batch_ratio * batch_count):
-                # backfill once — unless the reopened file-backed filter
-                # already carries state (resume path). A crash between the
-                # filter write and the round commit can leave the replayed
-                # round's urls pre-inserted: harmless (Bloom OR is
-                # idempotent; a cuckoo duplicate costs one slot and keeps
-                # prune exactness — false negatives remain impossible).
-                if self.bloom.n_inserted == 0:
-                    self.bloom.add_urls(seen.select("url"))
-                    # `seen` here is the state entering this round ⇒ the
-                    # filter now covers everything through round_id - 1
-                    self._mark_filter_covered(round_id - 1)
-                bloom_active = True
             if bloom_active:
                 new_links = self.bloom.prune_new(candidates, seen)
             else:
@@ -791,76 +858,57 @@ class CrawlEngine:
             next_discovery_seq += enqueued
             t_seq = time.monotonic()
 
-            # --- merge frontier & seen (Iceberg MERGE INTO) --------------------
+            # --- merge frontier & seen (the round's MERGE INTO, in memory) ------
+            # Both modes carry frontier and seen forward the same way; store
+            # mode publishes the result in the background tail below.
+            # Big-path rounds reuse the dequeue ranking's complement (narrow
+            # filter over the pinned rank checkpoint) and leave the merged
+            # frontier LAZY: both union inputs are narrow over this round's
+            # checkpoints (rank ckpt / seq ckpt), so lineage depth stays 1,
+            # and the next round's dequeue range-shuffles the frontier
+            # anyway — materializing it here would add a full frontier
+            # shuffle+pin job per round that the dequeue immediately
+            # re-arranges (r6: measured ~0.4 s/round at the 30k-batch bench
+            # shape, removed). Small-path rounds keep the broadcast
+            # anti-join but leave the merged frontier LAZY too, compacting
+            # every seen_compact_every rounds like the seen set: between
+            # compactions the next dequeue's TakeOrdered re-evaluates ≤K
+            # stacked anti-join layers, each narrow over pinned inputs (the
+            # round's batch ckpt broadcasts, the seq ckpt unions), so
+            # lineage depth is bounded by the cadence instead of growing
+            # per round — and the per-round full-frontier shuffle+pin job
+            # is gone (r6 session 3: ~0.3 s/round at the 800-batch bench
+            # shape). No anti-join against the frontier is needed for the
+            # insert: new_frontier urls were pruned against seen, and
+            # frontier ⊆ seen (oracle-differential tested).
             new_seen = new_frontier.select(
                 "url", F.md5(F.col("url")).alias("url_md5"))
-            if self.store is not None:
-                # Store mode: the table provider is the single publish
-                # path. The round's frontier/seen snapshots are produced BY
-                # the merge itself — MERGE INTO frontier (dequeued batch
-                # DELETE, new rows INSERT) and MERGE INTO seen (insert-only)
-                # — and the returned DataFrames read back from the written
-                # files: lineage is cut by storage instead of a second
-                # localCheckpoint materialization, and a resumed run
-                # continues from the exact bytes this run used.
-                # assume_disjoint invariant: new_frontier urls were pruned
-                # against seen, and frontier ⊆ seen (every enqueued url is
-                # registered the same round) — oracle-differential tested.
-                frontier = self.store.merge_into(
-                    self.spark, "frontier", new_frontier, on="url",
-                    round_id=round_id, target=frontier,
-                    delete_keys=dequeued_urls, assume_disjoint=True)
-                seen = self.store.merge_into(
-                    self.spark, "seen", new_seen, on="url",
-                    round_id=round_id, target=seen, assume_disjoint=True)
+            compact = (round_id + 1) % cfg.seen_compact_every == 0
+            if undequeued is not None:
+                frontier = undequeued.unionByName(new_frontier)
             else:
-                # In-memory mode. Big-path rounds reuse the dequeue
-                # ranking's complement (narrow filter over the pinned rank
-                # checkpoint) and leave the merged frontier LAZY: both
-                # union inputs are narrow over this round's checkpoints
-                # (rank ckpt / seq ckpt), so lineage depth stays 1, and the
-                # next round's dequeue range-shuffles the frontier anyway —
-                # materializing it here would add a full frontier
-                # shuffle+pin job per round that the dequeue immediately
-                # re-arranges (r6: measured ~0.4 s/round at the 30k-batch
-                # bench shape, removed). Small-path rounds keep the
-                # broadcast anti-join but leave the merged frontier LAZY
-                # too, compacting every seen_compact_every rounds like the
-                # seen set: between compactions the next dequeue's
-                # TakeOrdered re-evaluates ≤K stacked anti-join layers,
-                # each narrow over pinned inputs (the round's batch ckpt
-                # broadcasts, the seq ckpt unions), so lineage depth is
-                # bounded by the cadence instead of growing per round —
-                # and the per-round full-frontier shuffle+pin job is gone
-                # (r6 session 3: ~0.3 s/round at the 800-batch bench
-                # shape).
-                if undequeued is not None:
-                    frontier = undequeued.unionByName(new_frontier)
-                else:
-                    remaining = frontier.join(F.broadcast(dequeued_urls),
-                                              "url", "left_anti")
-                    frontier = remaining.unionByName(new_frontier)
-                    if (round_id + 1) % cfg.seen_compact_every == 0:
-                        frontier = (frontier.repartition(n_parts, "url")
-                                    .localCheckpoint(eager=True))
-                # seen grows as a lazy union of per-round parts — each part
-                # is narrow over an already-checkpointed round output, so
-                # lineage depth stays 1 and no extra materialization job
-                # runs; the union is compacted (checkpointed + repartitioned)
-                # periodically to bound plan size.
-                seen = seen.unionByName(new_seen)
-                if (round_id + 1) % cfg.seen_compact_every == 0:
-                    seen = (seen.repartition(n_parts, "url")
-                            .localCheckpoint(eager=True))
+                remaining = frontier.join(F.broadcast(dequeued_urls),
+                                          "url", "left_anti")
+                frontier = remaining.unionByName(new_frontier)
+                if compact:
+                    frontier = (frontier.repartition(n_parts, "url")
+                                .localCheckpoint(eager=True))
+            # seen grows as a lazy union of per-round parts — each part is
+            # narrow over an already-checkpointed round output, so lineage
+            # depth stays 1 and no extra materialization job runs; the
+            # union is compacted (checkpointed + repartitioned)
+            # periodically to bound plan size.
+            seen = seen.unionByName(new_seen)
+            if compact:
+                seen = (seen.repartition(n_parts, "url")
+                        .localCheckpoint(eager=True))
             frontier_count = frontier_count - batch_count + enqueued
             seen_count += enqueued
-            if bloom_active:
-                self.bloom.add_urls(new_frontier.select("url"))
-                # even if a cooperative commit race is lost below, marking
-                # this round covered is safe: the rebase path resets the
-                # filter (clearing the marker) before any reuse
-                self._mark_filter_covered(round_id)
             t_merge = time.monotonic()
+
+            # --- JOIN 2: publishes commit in round order ----------------------
+            t_join += join(publish_job)
+            publish_job = None
 
             def ms(a, b):
                 return round((b - a) * 1000, 1)
@@ -871,101 +919,94 @@ class CrawlEngine:
                 "results_total": results_count, "seen_total": seen_count,
                 "next_discovery_seq": next_discovery_seq,
                 "bloom_active": bloom_active,
+                # filter size at this round's probe
                 "bloom_inserted": self.bloom.n_inserted,
                 "bloom_rebroadcast_bytes":
                     self.bloom.last_rebroadcast_bytes,
                 "partitions": n_parts,
-                # per-phase wall breakdown — the round's lineage counters
+                # per-phase wall breakdown — the round's lineage counters;
+                # t_join_ms is the driver's wait on background tails (the
+                # last round's also carries run()'s final join)
                 "t_dequeue_ms": ms(t0, t_dequeue),
                 "t_fetch_parse_ms": ms(t_dequeue, t_fetch),
-                "t_prune_ms": ms(t_fetch, t_prune),
+                "t_prune_ms": ms(t_joined, t_prune),
                 "t_seq_ms": ms(t_prune, t_seq),
                 "t_merge_ms": ms(t_seq, t_merge),
-                "wall_ms": round((time.monotonic() - t0) * 1000, 1),
+                "t_join_ms": round(t_join * 1000, 1),
+                "wall_ms": ms(t0, time.monotonic()),
             })
 
-            if cooperative:
-                # synchronous commit: the conflict must surface BEFORE the
-                # next round builds on uncommitted state (the single-writer
-                # overlap below would detect it one round late, wasting a
-                # second round of work per race lost)
-                try:
-                    self.store.write("results", result, round_id)
-                    if self._robots_dynamic is not None:
-                        self.store.write("robots", self._robots_dynamic,
-                                         round_id)
-                    self.store.commit_round(round_id, rounds[-1])
-                except ConcurrentCommitError:
-                    # a LIVE peer publishes the manifest within ms of the
-                    # marker claim — wait for it rather than reading the
-                    # manifest inside that window (a round-0 race would
-                    # otherwise see manifest=None). Timeout ⇒ the marker
-                    # holder is dead: an orphaned marker from a crashed
-                    # run, not a peer — clean our staging and fail loudly.
-                    if self.store.await_round(round_id) is None:
-                        self.store.abort_round(round_id)
-                        raise
-                    self.rebase_count += 1
-                    # rebase: drop this round's staged artifacts and every
-                    # in-memory derivation of it, reload the winner's
-                    # committed state, and continue from there
-                    self.store.abort_round(round_id)
-                    rounds.pop()
-                    st = self._load_committed_state()
-                    frontier, seen = st["frontier"], st["seen"]
-                    results_parts = st["results_parts"]
-                    filtered_parts = st["filtered_parts"]
-                    results_count = st["results_count"]
-                    next_discovery_seq = st["next_discovery_seq"]
-                    frontier_count = st["frontier_count"]
-                    seen_count = st["seen_count"]
-                    round_id = st["round_id"]
-                    if bloom_active or self.bloom.n_inserted:
-                        # the filter carries our aborted rounds' urls but
-                        # may MISS urls the winner committed — a missing
-                        # url is a definite-negative (duplicate crawl), so
-                        # rebuild from the committed seen at reactivation
-                        self.bloom.reset()
-                    bloom_active = False
-                    continue
-            elif self.store is not None:
-                # frontier/seen snapshots were already published by the
-                # MERGE INTO above; the results write + commit marker run
-                # in a BACKGROUND thread overlapping the next round's
-                # dequeue (concurrent driver-thread jobs are a supported
-                # Spark pattern). Ordering: the previous round's publish is
-                # joined before this one starts, so commits stay
-                # sequential; a crash mid-overlap leaves the previous
-                # round committed — the same consistency as before, one
-                # round-barrier cheaper per round.
-                _join_pending()
-                publish_errs: list[BaseException] = []
-
-                def _publish(res=result, rid=round_id, cnt=rounds[-1],
-                             robots=self._robots_dynamic,
-                             errs=publish_errs):
+            # --- background tail ----------------------------------------------
+            # After the final round no probe reads the filter, so the insert
+            # is skipped — unless the filter is persisted, where resume
+            # trusts it only if it covers the manifest round.
+            last = frontier_count <= 0 or results_count >= cfg.max_urls
+            if bloom_active and (cfg.checkpoint_dir or not last):
+                # a cooperative writer that loses the commit race below
+                # joins this insert, then resets the filter
+                filter_job = tail.submit(self.bloom.add_urls,
+                                         new_frontier.select("url"),
+                                         covered_round=round_id)
+            if self.store is not None:
+                # the commit gets its own copy of the counters: the final
+                # join below still adds to the round's entry
+                publish = (round_id, result, frontier, seen, new_seen,
+                           self._robots_dynamic, dict(rounds[-1]))
+                if not cooperative:
+                    # a crash while this overlaps the next round leaves the
+                    # previous round committed; resume replays from there
+                    publish_job = tail.submit(self._publish_round, *publish)
+                else:
+                    # synchronous commit: the conflict must surface BEFORE
+                    # the next round builds on uncommitted state (an
+                    # overlapped publish would detect it one round late,
+                    # wasting a second round of work per race lost)
                     try:
-                        self.store.write("results", res, rid)
-                        if robots is not None:
-                            self.store.write("robots", robots, rid)
-                        self.store.commit_round(rid, cnt)
-                    except BaseException as e:  # re-raised at next join
-                        errs.append(e)
-
-                th = threading.Thread(target=_publish, daemon=True)
-                th.start()
-                pending_publish = (th, publish_errs)
+                        self._publish_round(*publish)
+                    except ConcurrentCommitError:
+                        # a LIVE peer publishes the manifest within ms of
+                        # the marker claim — wait for it rather than
+                        # reading the manifest inside that window (a
+                        # round-0 race would otherwise see manifest=None).
+                        # Timeout ⇒ the marker holder is dead: an orphaned
+                        # marker from a crashed run, not a peer — clean our
+                        # staging and fail loudly.
+                        if self.store.await_round(round_id) is None:
+                            self.store.abort_round(round_id)
+                            raise
+                        self.rebase_count += 1
+                        # rebase: drop this round's staged artifacts and
+                        # every in-memory derivation of it, reload the
+                        # winner's committed state, and continue from there
+                        self.store.abort_round(round_id)
+                        rounds.pop()
+                        st = self._load_committed_state()
+                        frontier, seen = st["frontier"], st["seen"]
+                        results_parts = st["results_parts"]
+                        filtered_parts = st["filtered_parts"]
+                        results_count = st["results_count"]
+                        next_discovery_seq = st["next_discovery_seq"]
+                        frontier_count = st["frontier_count"]
+                        seen_count = st["seen_count"]
+                        round_id = st["round_id"]
+                        join(filter_job)
+                        filter_job = None
+                        if bloom_active or self.bloom.n_inserted:
+                            # the filter carries our aborted rounds' urls
+                            # but may MISS urls the winner committed — a
+                            # missing url is a definite-negative (duplicate
+                            # crawl), so rebuild from the committed seen at
+                            # reactivation
+                            self.bloom.reset()
+                        bloom_active = False
+                        continue
             round_id += 1
 
-        _join_pending()  # last round's overlapped publish must land
-        if self.store is not None:
-            # the returned state must outlive the store contents — a later
-            # run over the same checkpoint dir may rewrite these round dirs
-            # — so pin the storage-backed tables into the session once, at
-            # the run boundary (not per round: within a run no referenced
-            # snapshot dir is ever overwritten).
-            frontier = frontier.localCheckpoint(eager=True)
-            seen = seen.localCheckpoint(eager=True)
+        # the last round's tails must land before the state is returned
+        waited = join(filter_job) + join(publish_job)
+        if rounds:
+            rounds[-1]["t_join_ms"] += round(waited * 1000, 1)
+            rounds[-1]["wall_ms"] += round(waited * 1000, 1)
         results = results_parts[0]
         for part in results_parts[1:]:
             results = results.unionByName(part)

@@ -131,7 +131,8 @@ class ShardedBloom:
         return np.mod(h1.astype(np.int64), self.n_shards)
 
     # -- build / merge -------------------------------------------------------
-    def add_urls(self, df: DataFrame, url_col: str = "url") -> None:
+    def add_urls(self, df: DataFrame, url_col: str = "url",
+                 covered_round: int | None = None) -> None:
         """OR the URLs of ``df`` into the shard bitmap files.
 
         The per-shard build runs distributed (one Arrow group per shard)
@@ -139,6 +140,8 @@ class ShardedBloom:
         the driver collects only ``(shard, n, changed)`` ints. Task retries
         are safe: republishing the same version with the same OR result is
         idempotent (the content is a pure function of old-state + batch).
+        ``covered_round`` records, in the same atomic manifest save as the
+        new shard versions, the last crawl round the filter now covers.
         """
         hashed = self.with_hashes(df.select(url_col), url_col)
         hashed = hashed.withColumn(
@@ -181,6 +184,8 @@ class ShardedBloom:
                 self._dirty.add(row["shard"])
             self.n_inserted += row["n"]
         self.meta.counters["n_inserted"] = self.n_inserted
+        if covered_round is not None:
+            self.meta.counters["covered_round"] = covered_round
         self.meta.save()
 
     # -- probe ----------------------------------------------------------------

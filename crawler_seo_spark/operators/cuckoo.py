@@ -251,11 +251,15 @@ class ShardedCuckoo:
             "occupied": self._occupied, "stash_n": self._stash_n})
         self.meta.save()
 
-    def add_urls(self, df: DataFrame, url_col: str = "url") -> None:
+    def add_urls(self, df: DataFrame, url_col: str = "url",
+                 covered_round: int | None = None) -> None:
         """Insert the urls of ``df`` — hashing JVM-side, mutation in the
-        shard-owning tasks; only accounting ints reach the driver."""
+        shard-owning tasks; only accounting ints reach the driver.
+        ``covered_round`` as in :meth:`ShardedBloom.add_urls`."""
         rows = self._mutate(df, url_col, "insert")
         self.n_inserted += sum(r["n"] for r in rows)
+        if covered_round is not None:
+            self.meta.counters["covered_round"] = covered_round
         self._save_meta()
 
     def delete_urls(self, df: DataFrame, url_col: str = "url") -> int:

@@ -1,9 +1,9 @@
 """Snapshot-versioned parquet tables (checkpoint/resume layer) with
 Iceberg-shaped MERGE INTO and concurrent-writer-safe commits.
 
-Production target is Iceberg (`MERGE INTO` frontier/seen, snapshot-per-round
-time travel); the Iceberg runtime jars are not in this container, so this
-module provides the same contract on plain parquet:
+Production target is Iceberg (`MERGE INTO` frontier, fast-append seen,
+snapshot-per-round time travel); the Iceberg runtime jars are not in this
+container, so this module provides the same contract on plain parquet:
 
 * one directory per table per round: ``{root}/{table}/r{round:05d}/``,
 * atomic data publish: data lands in a ``_tmp`` directory, then a single
@@ -371,10 +371,11 @@ class SnapshotStore:
         """Iceberg FAST-APPEND: write ONLY ``df`` as this round's data dir
         and publish a snapshot referencing the parent snapshot's dirs plus
         the new one — O(batch) IO per append, never O(table). The shape a
-        monotonically growing table (a persisted dedup signature index at
-        100 TB) requires: :meth:`write`/:meth:`merge_into` rewrite the
-        whole table per round, which is correct for working-set-sized
-        state (the frontier) and a scale-killer for an index."""
+        monotonically growing table (the crawl's seen set, a persisted
+        dedup signature index at 100 TB) requires: :meth:`write` /
+        :meth:`merge_into` rewrite the whole table per round, which is
+        correct for working-set-sized state (the frontier) and a
+        scale-killer for an index."""
         parent_dirs: list[str] = []
         if parent_round is not None:
             parent_dirs = [d for d in self._snapshot_dirs(table, parent_round)

@@ -11,8 +11,11 @@ contract; growing the budget is a different crawl by definition.
 
 import tempfile
 
+import pytest
+
 from crawler_seo_spark.config import CrawlConfig
 from crawler_seo_spark.engine import CrawlEngine
+from crawler_seo_spark.oracle import run_oracle
 from crawler_seo_spark.sources.synthetic_site import SEED_URL
 from crawler_seo_spark.tables import SnapshotStore
 
@@ -341,3 +344,94 @@ def test_cooperative_writers_split_politeness_budget(spark):
                    .filter("round = 1").collect())
     gaps = {round(b - a, 3) for a, b in zip(offs2, offs2[1:])}
     assert min(gaps) < 200.0  # full budget, not halved
+
+
+def _assert_matches_oracle(state, oracle):
+    import collections
+
+    assert _order(state) == [(r["crawl_seq"], r["url"], r["depth"],
+                              r["priority"], r["round"])
+                             for r in oracle.crawl_order]
+    assert {r["url"] for r in state.seen.collect()} == oracle.seen_urls
+    assert (collections.Counter((r["url"], r["reason"])
+                                for r in state.filtered.collect())
+            == collections.Counter((f["url"], f["reason"])
+                                   for f in oracle.filtered))
+
+
+@pytest.mark.parametrize("table", ["frontier", "results"])
+def test_crash_in_background_publish_resumes_exactly(
+        spark, small_site, pages_df, monkeypatch, table):
+    """Round 1's publish runs in the background while round 2 fetches. A
+    write failing there must surface from run() at the next join, leave
+    round 0 as the committed round, and a resume must replay the exact
+    crawl — with the Bloom filter on, whose covered_round may now be AHEAD
+    of the manifest (trusted: extra urls are only false positives)."""
+    ckpt = tempfile.mkdtemp(prefix=f"crash_{table}_")
+    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=60, batch_size=15,
+                      checkpoint_dir=ckpt, bloom_min_seen=5,
+                      bloom_seen_batch_ratio=0)
+    write = SnapshotStore.write
+
+    def failing_write(self, name, df, round_id):
+        if (name, round_id) == (table, 1):
+            raise OSError(f"injected failure writing {name} round 1")
+        return write(self, name, df, round_id)
+
+    monkeypatch.setattr(SnapshotStore, "write", failing_write)
+    with pytest.raises(OSError, match="injected failure"):
+        CrawlEngine(spark, pages_df, cfg).run()
+    monkeypatch.undo()
+    assert SnapshotStore(ckpt).manifest()["round"] == 0
+
+    resumed = CrawlEngine(spark, pages_df, cfg).run(resume=True)
+    assert resumed.rounds[0]["round"] == 1
+    _assert_matches_oracle(resumed, run_oracle(small_site, cfg))
+
+
+def test_bloom_crawl_resumed_with_larger_budget_matches_oracle(
+        spark, small_site, pages_df):
+    """A persisted filter covers the last committed round (its final
+    insert is kept and joined), so a resume that grows the budget trusts
+    it without a rebuild and still crawls exactly. 28 URLs ends on a
+    round boundary of the 60-URL crawl (cumulative 1, 6, 13, 28, ...)."""
+    ckpt = tempfile.mkdtemp(prefix="grow_ckpt_")
+    base = dict(seed_url=SEED_URL, batch_size=15, checkpoint_dir=ckpt,
+                bloom_min_seen=5, bloom_seen_batch_ratio=0)
+    first = CrawlEngine(spark, pages_df, CrawlConfig(**base, max_urls=28))
+    first.run()
+    assert (first._filter_covered_round()
+            == SnapshotStore(ckpt).manifest()["round"])
+
+    cfg = CrawlConfig(**base, max_urls=60)
+    eng = CrawlEngine(spark, pages_df, cfg)
+    state = eng.run(resume=True)
+    assert eng.bloom.meta.epoch == first.bloom.meta.epoch  # not rebuilt
+    _assert_matches_oracle(state, run_oracle(small_site, cfg))
+
+
+def test_unpersisted_filter_skips_final_insert(spark, small_site, pages_df,
+                                              monkeypatch):
+    """Without a checkpoint dir no probe can read the filter after the
+    last round, so its insert is skipped: inserts cover the activation
+    backfill and every active round but the last."""
+    from crawler_seo_spark.operators.bloom import ShardedBloom
+
+    covered = []
+    add_urls = ShardedBloom.add_urls
+
+    def spy(self, df, url_col="url", covered_round=None):
+        covered.append(covered_round)
+        return add_urls(self, df, url_col, covered_round)
+
+    monkeypatch.setattr(ShardedBloom, "add_urls", spy)
+    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=60, batch_size=15,
+                      bloom_min_seen=5, bloom_seen_batch_ratio=0)
+    state = CrawlEngine(spark, pages_df, cfg).run()
+
+    first = min(r["round"] for r in state.rounds if r["bloom_active"])
+    last = state.rounds[-1]["round"]
+    assert first < last
+    assert covered == list(range(first - 1, last))
+    assert all(r["t_join_ms"] >= 0 for r in state.rounds)
+    _assert_matches_oracle(state, run_oracle(small_site, cfg))
