@@ -193,9 +193,3 @@ class CrawlConfig:
     seen_compact_every: int = 8
     host_salt_buckets: int = 8  # salt fan-out for hot hosts
     checkpoint_dir: str | None = None  # enable per-round snapshots when set
-    # Cooperative multi-writer crawling: give each engine sharing one
-    # checkpoint_dir a distinct writer_id. Writers stage rounds under
-    # writer-scoped names, race on the commit marker, and the loser
-    # rebases onto the winner's committed round instead of dying.
-    writer_id: str | None = None
-    robots_default_allow: bool = True  # reference has no robots.txt support

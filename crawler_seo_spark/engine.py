@@ -1,26 +1,34 @@
 """The distributed crawl engine: iterative DataFrame jobs per crawl round.
 
-Each round is split into a CRITICAL PATH, which the next round's dequeue
-needs, and a BACKGROUND TAIL, which only durability and the next round's
-Bloom probe need (SURVEY §3, north-star design)::
+Every round runs ONE pipeline, whether pages come from a page-store
+DataFrame or from a live origin. ``run()`` is a loop over named phase
+methods sharing one :class:`LoopState`; the phases match the per-round
+``t_*_ms`` counters. Each round is split into a CRITICAL PATH, which the
+next round's dequeue needs, and a BACKGROUND TAIL, which only durability
+and the next round's Bloom probe need (SURVEY §3, north-star design)::
 
     critical path (driver thread)
-      frontier dequeue (ORDER BY priority DESC, discovery_seq ASC LIMIT B)
-      → per-host politeness schedule + salted host repartition
-      → fetch (broadcast batch ⋈ page store; HTTP mapInPandas in LIVE mode)
-        fused with the Arrow-batched parse/analyze UDF
-      → candidate links: posexplode → within-round first-occurrence dedup
-      → JOIN 1: the previous round's Bloom insert (or this round's
-        activation backfill, started at round start)
-      → admission: Bloom probe + exact anti-join vs seen (J1), robots
-      → deterministic discovery_seq assignment
-      → in-memory frontier/seen merge (lazy unions over pinned inputs)
-      → JOIN 2: the previous round's snapshot publish
-    background tail (overlaps the next round's dequeue and fetch+parse)
+      dequeue      ORDER BY priority DESC, discovery_seq ASC LIMIT B
+      schedule     per-host politeness slots + salted host repartition
+      fetch_parse  one mapInPandas kernel fetches each url and parses /
+                   analyzes the page in the same Python worker. LIVE mode
+                   calls the per-url fetcher, paced by the schedule; store
+                   mode takes the page from the JVM (batch LEFT JOIN
+                   broadcast(pages ⋉ broadcast(batch.url))) and does not
+                   pace — it is a replay. A url with no page is a 404 miss.
+      JOIN 1       the previous round's Bloom insert (or this round's
+                   activation backfill, started at round start)
+      admit        candidate links (posexplode → within-round first
+                   occurrence), Bloom probe + exact anti-join vs seen
+                   (J1), robots
+      number       deterministic discovery_seq assignment
+      merge        in-memory frontier/seen MERGE (lazy unions over pins)
+      JOIN 2       the previous round's snapshot publish
+    background tail (overlaps the next round's dequeue and fetch_parse)
       Bloom insert of the round's new urls, whose filter-manifest save
         also records covered_round
-      snapshot publish: results + robots writes, the frontier snapshot
-        (the round's MERGE result), fast-append seen, then commit_round
+      publish: results + robots writes, the frontier snapshot (the round's
+        MERGE result), fast-append seen, then commit_round
     run() returns only after both tails of the last round are joined.
 
 The driver loop is the only imperative control flow (BFS round barriers are
@@ -35,22 +43,23 @@ link position on the page) within each round — never from
 from __future__ import annotations
 
 import logging
+import math
 import os
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .config import CrawlConfig
-from .functions.parse import analysis_column
 from .functions.urlnorm import base_domain_of, is_priority_col
 from .operators.bloom import ShardedBloom
 from .operators.politeness import schedule_fetches
 from .operators.robots import filter_allowed, robots_table
-from .tables import ConcurrentCommitError, SnapshotStore
+from .sources.fetch import make_http_fetch, miss_response, paced_rows
+from .tables import SnapshotStore
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -65,6 +74,10 @@ SEEN_SCHEMA = T.StructType([
     T.StructField("url_md5", T.StringType(), False),
 ])
 
+# the fetch response fields a page store carries (sources/fetch.FETCH_SCHEMA)
+FETCH_FIELDS = ("status_code", "content_type", "final_url",
+                "response_time_ms", "content_length", "html", "headers")
+
 
 @dataclass
 class CrawlState:
@@ -76,8 +89,38 @@ class CrawlState:
     crawl_order: DataFrame      # (crawl_seq, url, depth, priority, round)
 
 
+@dataclass
+class LoopState:
+    """What one round hands the next: the carried frontier and seen set,
+    the per-round result parts, and the exact counters a committed round
+    records (so resume rebuilds this object from the manifest)."""
+    frontier: DataFrame
+    seen: DataFrame
+    round_id: int
+    results_count: int
+    next_discovery_seq: int
+    frontier_count: int
+    seen_count: int
+    results_parts: list[DataFrame] = field(default_factory=list)
+    filtered_parts: list[DataFrame] = field(default_factory=list)
+
+
+def _stored_response(rec) -> dict:
+    """A store-mode row of the fetch_parse input as a fetch response. The
+    store join is a LEFT join, so a batch url with no page arrives with
+    null page columns: the network 404 miss. pandas carries those nulls
+    in numeric columns as NaN (and so every hit as a float)."""
+    if math.isnan(rec.status_code):
+        return miss_response(rec.url)
+    return {"status_code": int(rec.status_code),
+            "content_type": rec.content_type, "final_url": rec.final_url,
+            "response_time_ms": float(rec.response_time_ms),
+            "content_length": int(rec.content_length), "html": rec.html,
+            "headers": rec.headers}
+
+
 class CrawlEngine:
-    """One crawl run over a page-store DataFrame."""
+    """One crawl run over a page-store DataFrame or a live origin."""
 
     def __init__(self, spark: SparkSession, pages: DataFrame | None,
                  config: CrawlConfig,
@@ -91,23 +134,27 @@ class CrawlEngine:
 
         ``pages=None`` = LIVE mode: each round's batch is fetched over HTTP
         by the politeness-scheduled ``mapInPandas`` fetcher
-        (sources/fetch.py) instead of joined against a page store.
+        (sources/fetch.py) instead of looked up in a page store.
         ``fetch_fn_factory`` overrides the per-task fetcher (tests inject a
         deterministic one)."""
+        if config.seen_filter not in ("bloom", "cuckoo"):
+            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', "
+                             f"got {config.seen_filter!r}")
+        if config.fetch_robots and pages is not None:
+            raise ValueError("fetch_robots=True needs LIVE mode (pages=None):"
+                             " a page store serves no robots.txt — pass "
+                             "robots_rules instead")
         self.spark = spark
+        self.n_parts = spark.sparkContext.defaultParallelism
         self.pages = pages
-        self.fetch_fn_factory = fetch_fn_factory
+        self.fetch_fn_factory = fetch_fn_factory or make_http_fetch
         self.config = config
         self.analyzers = analyzers or []
         self.base_domain = base_domain_of(config.seed_url)
         # Seen-filter shard state rides the checkpoint dir: resume reopens
         # the same file-backed shards (and skips the seen backfill); without
         # checkpointing the filters use a private temp dir.
-        # cooperative writers keep writer-local filter state (it is derived
-        # from the committed seen set; a rebase resets + re-backfills it)
-        filter_name = ("seen_filter" if config.writer_id is None
-                       else f"seen_filter.{config.writer_id}")
-        filter_dir = (os.path.join(config.checkpoint_dir, filter_name)
+        filter_dir = (os.path.join(config.checkpoint_dir, "seen_filter")
                       if config.checkpoint_dir else None)
         if config.seen_filter == "cuckoo":
             # deletable variant (recrawl invalidation); same prune contract
@@ -124,13 +171,12 @@ class CrawlEngine:
                        if robots_rules else None)
         self._robots_dynamic: DataFrame | None = None  # LIVE robots cache
         self._robots_delay_count = 0  # hosts with a Crawl-delay directive
-        self.store = (SnapshotStore(config.checkpoint_dir,
-                                    writer_id=config.writer_id)
+        self.store = (SnapshotStore(config.checkpoint_dir)
                       if config.checkpoint_dir else None)
-        self.rebase_count = 0  # cooperative commit races lost (telemetry)
 
     # ------------------------------------------------------------------
-    def _seed_frontier(self) -> tuple[DataFrame, DataFrame, int]:
+    def _seed_frontier(self) -> LoopState:
+        """Fresh start: the pinned seed frontier and seen set, round 0."""
         import pandas as pd
 
         from .functions.urlnorm import (
@@ -173,68 +219,206 @@ class CrawlEngine:
         seen = self.spark.createDataFrame(pd.DataFrame({
             "url": seeds, "url_md5": [url_md5(u) for u in seeds]}),
             SEEN_SCHEMA)
-        return frontier, seen, n
+        return LoopState(frontier=frontier.localCheckpoint(eager=True),
+                         seen=seen.localCheckpoint(eager=True), round_id=0,
+                         results_count=0, next_discovery_seq=n,
+                         frontier_count=n, seen_count=n)
 
-    def _fetch(self, batch: DataFrame) -> DataFrame:
-        """Synthetic fetch, found rows only: broadcast the (small) batch into
-        a hash join against the page store — the store is streamed ONCE per
-        round, never shuffled. Store-miss rows (network 404s) are derived
-        AFTER the round result is checkpointed, by anti-joining the batch
-        against the found result's urls (two tiny checkpointed inputs — zero
-        extra store scans; round 1 streamed the store twice per round).
-        LIVE mode (``pages=None``) never reaches here — it runs the fused
-        fetch+analyze ``mapInPandas`` (:meth:`_fused_live_round`) instead.
-        """
-        return self.pages.join(F.broadcast(batch), "url", "inner")
+    def _load_committed_state(self, manifest: dict) -> LoopState:
+        """Resume: rebuild the loop state from the manifest's committed
+        round."""
+        last, c = manifest["round"], manifest["counters"]
+        frontier = self.store.read(self.spark, "frontier", last) \
+            .localCheckpoint(eager=True)
+        seen = self.store.read(self.spark, "seen", last) \
+            .localCheckpoint(eager=True)
+        results_parts, filtered_parts = [], []
+        for r in range(last + 1):
+            part = self.store.read(self.spark, "results", r)
+            results_parts.append(part)
+            filtered_parts.append(self._filtered_from(part))
+        # live-robots state is part of the replayed inputs: without it a
+        # resumed round would take the unlimited-rps fast path (breaking
+        # bit-identical resume) and ignore learned Crawl-delays until the
+        # next TTL refetch
+        # Missing robots snapshot = crawl ran without live robots, nothing
+        # to restore. A PRESENT-but-unreadable one must NOT degrade to
+        # no-robots state (the resumed round would take the unlimited-rps
+        # fast path and ignore learned Crawl-delays) — let the read error
+        # propagate.
+        if self.store.has_table("robots", last):
+            self._robots_dynamic = self.store.read(
+                self.spark, "robots", last).localCheckpoint(eager=True)
+            self._robots_delay_count = self._robots_dynamic.filter(
+                F.col("crawl_delay").isNotNull()).count()
+        return LoopState(frontier=frontier, seen=seen, round_id=last + 1,
+                         results_count=c["results_total"],
+                         next_discovery_seq=c["next_discovery_seq"],
+                         frontier_count=c["frontier_after"],
+                         seen_count=c["seen_total"],
+                         results_parts=results_parts,
+                         filtered_parts=filtered_parts)
 
-    def _fused_live_round(self, batch: DataFrame,
-                          max_depth: int) -> DataFrame:
-        """LIVE-mode fused round stage: fetch + parse/analyze in ONE
-        ``mapInPandas`` — the page html never crosses the Arrow boundary
-        (the unfused form shipped each ~10 KB page python→JVM→python→JVM;
-        at 80k URLs/round that is ~3 GB of extra Arrow+join traffic per
-        round, and memory bandwidth is exactly what does not scale with
-        cores). Output rows are byte-identical to the store-join path
-        (tests/test_politeness_fetch.py::test_live_mode_matches_store_mode).
-        """
+    def _start(self, resume: bool) -> LoopState:
+        """The state to start from: the committed round on resume, else
+        the seeds."""
+        manifest = None
+        if self.store is not None and resume:
+            # reclaim markers orphaned by a crash between marker claim and
+            # manifest publish
+            self.store.recover_incomplete()
+            manifest = self.store.manifest()
+        if manifest is not None:
+            # A reopened filter is only trustworthy if it covers every
+            # committed round: a crash after a round's commit but before
+            # its background insert (or a filter dir restored from an
+            # older copy) leaves the filter missing committed urls — a
+            # bloom miss on one of them is a definite-negative that
+            # bypasses the exact anti-join and duplicates the crawl.
+            # Covered ≥ manifest round ⇒ superset of the committed seen
+            # set (extra uncommitted-round urls only cost false positives,
+            # which the exact join absorbs). Anything less ⇒ reset; the
+            # activation-time backfill rebuilds from the committed seen.
+            if (self.bloom.n_inserted
+                    and self._filter_covered_round() < manifest["round"]):
+                self.bloom.reset()
+            return self._load_committed_state(manifest)
+        # fresh run: a stale store/filter from a previous run over the
+        # same checkpoint dir must not leak into this one — old commit
+        # markers would refuse round 0, and a stale seen filter lacking
+        # this run's urls would produce FALSE NEGATIVES (duplicates)
+        # through the skipped backfill. Reset UNCONDITIONALLY (not only
+        # when a manifest exists): a run that died in round 0 between
+        # the O_EXCL marker claim and the manifest publish leaves a
+        # marker with NO manifest, which would still refuse round 0.
+        if self.store is not None:
+            self.store.reset()
+        if self.bloom.n_inserted:
+            self.bloom.reset()
+        return self._seed_frontier()
+
+    # -- phases ---------------------------------------------------------
+    def _dequeue(self, s: LoopState,
+                 budget: int) -> tuple[DataFrame, DataFrame | None]:
+        """O1/O3: the round's batch (with crawl_seq and round), plus the
+        post-dequeue frontier when the big path yields it for free.
+
+        Small budgets: TakeOrderedAndProject + one-task window (the merge
+        task holds ≤ budget rows). Large budgets: the same total order via
+        the distributed prefix-sum — rank the frontier in (priority DESC,
+        discovery_seq ASC) order with no single reducer, take rank <
+        budget. Identical batch either way."""
+        dequeue_order = [F.desc("priority"), F.asc("discovery_seq")]
+        if budget >= self.config.seq_window_threshold:
+            from .operators.sequence import global_sequence
+            ranked = global_sequence(s.frontier, dequeue_order, "_rank")
+            batch = (ranked
+                     .filter(F.col("_rank") < budget)
+                     .withColumn("crawl_seq",
+                                 (F.col("_rank") + F.lit(s.results_count))
+                                 .cast("long"))
+                     .drop("_rank")
+                     .withColumn("round", F.lit(s.round_id)))
+            # the rank's complement IS the post-dequeue frontier — a
+            # narrow filter over the same pinned ranking, replacing the
+            # per-round broadcast-anti-join of the dequeued urls against
+            # the full frontier in the merge
+            return batch, ranked.filter(F.col("_rank") >= budget).drop("_rank")
+        batch = s.frontier.orderBy(*dequeue_order).limit(budget)
+        w = Window.orderBy(*dequeue_order)
+        batch = (batch
+                 .withColumn("crawl_seq",
+                             F.row_number().over(w).cast("long") - 1
+                             + F.lit(s.results_count).cast("long"))
+                 .withColumn("round", F.lit(s.round_id)))
+        return batch, None
+
+    def _schedule(self, batch: DataFrame) -> DataFrame:
+        """S2 + J4: per-host politeness slots, then the salted host
+        repartition.
+
+        At "unlimited" rate budgets (≥1e8 rps — benchmark / offline replay
+        mode) every offset is ~0: skip the per-host rank window and project
+        constant slots. Identical crawl semantics — the schedule only TIMES
+        fetches, never orders results."""
+        cfg = self.config
+        host_delays = None
+        if self._robots_dynamic is not None and self._robots_delay_count:
+            # robots Crawl-delay overrides: a host's interval becomes
+            # max(1/rps, crawl_delay) — forces the real schedule even in
+            # unlimited-rps replay mode
+            host_delays = (self._robots_dynamic
+                           .filter(F.col("crawl_delay").isNotNull())
+                           .select("host", F.col("crawl_delay")
+                                   .alias("crawl_delay_s")))
+        if cfg.requests_per_second >= 1e8 and host_delays is None:
+            from .operators.politeness import with_host
+            batch = (with_host(batch)
+                     .withColumn("fetch_slot", F.lit(0).cast("long"))
+                     .withColumn("scheduled_offset_ms", F.lit(0.0)))
+        else:
+            batch = schedule_fetches(batch, cfg.requests_per_second,
+                                     host_delays=host_delays)
+        # one hot host's fetches spread over salt buckets (each row keeps
+        # its politeness slot, so the rate budget still holds; the skew
+        # kill is for fetch/parse work)
+        if cfg.host_salt_buckets > 1:
+            from .operators.politeness import salted_repartition
+            batch = salted_repartition(
+                batch, cfg.host_salt_buckets).drop("host_salt")
+        return batch
+
+    def _store_lookup(self, batch: DataFrame) -> DataFrame:
+        """Store mode's fetch: every batch row with its stored page, or
+        null page columns for a miss. The store streams ONCE through a
+        broadcast semi-join against the batch's urls — never shuffled,
+        never broadcast itself; only the ≤ batch matching pages are
+        broadcast into the batch's LEFT join."""
+        pages = (self.pages.select("url", *FETCH_FIELDS)
+                 .join(F.broadcast(batch.select("url")), "url", "left_semi"))
+        return batch.join(F.broadcast(pages), "url", "left")
+
+    def _fetch_parse(self, batch: DataFrame) -> DataFrame:
+        """S1 + F6/F7 gates + parse/analyze, fused: ONE ``mapInPandas``
+        kernel fetches each row's page and analyzes it in the same Python
+        worker, so a page crosses the Python-UDF boundary once and its
+        html never travels back to the JVM (the unfused form shipped each
+        ~10 KB page python→JVM→python→JVM; at 80k URLs/round that is
+        ~3 GB of extra Arrow+join traffic per round, and memory bandwidth
+        is exactly what does not scale with cores). Both modes emit a row
+        for EVERY batch url; tests/test_politeness_fetch.py::
+        test_live_mode_matches_store_mode pins them byte-identical."""
         import hashlib
 
         from .functions.parse import ANALYSIS_SCHEMA, analyze_page
+        live = self.pages is None
         factory = self.fetch_fn_factory
-        if factory is None:
-            from .sources.fetch import make_http_fetch
-            factory = make_http_fetch
-        base_domain = self.base_domain
-        out_schema = T.StructType([
-            T.StructField("crawl_seq", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("depth", T.IntegerType()),
-            T.StructField("priority", T.IntegerType()),
-            T.StructField("round", T.IntegerType()),
-            T.StructField("content_md5", T.StringType()),
-            T.StructField("status_code", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("final_url", T.StringType()),
-            T.StructField("response_time_ms", T.DoubleType()),
-            T.StructField("content_length", T.LongType()),
-            T.StructField("headers",
-                          T.MapType(T.StringType(), T.StringType())),
-            T.StructField("host", T.StringType()),
-            T.StructField("fetch_slot", T.LongType()),
-            T.StructField("scheduled_offset_ms", T.DoubleType()),
-            T.StructField("analysis", ANALYSIS_SCHEMA),
-        ])
+        if live:
+            rows_in = batch
+        else:
+            # the batch feeds both sides of the store lookup; the lazy pin
+            # materializes inside the semi-join's broadcast job, so the
+            # stream side does not rerun the per-host window and the salt
+            # exchange
+            rows_in = self._store_lookup(batch.localCheckpoint(eager=False))
+        base_domain, max_depth = self.base_domain, self.config.max_depth
+        out_schema = T.StructType.fromDDL(
+            "crawl_seq long, url string, depth int, priority int, round int, "
+            "content_md5 string, status_code int, content_type string, "
+            "final_url string, response_time_ms double, content_length long, "
+            "headers map<string,string>, host string, fetch_slot long, "
+            "scheduled_offset_ms double").add("analysis", ANALYSIS_SCHEMA)
 
         def kernel(batches):
             import pandas as pd
 
-            from .sources.fetch import paced_rows
-            fetch = factory()
+            fetch = factory() if live else None
             start = time.monotonic()
             for pdf in batches:
                 rows = []
-                for rec in paced_rows(pdf, start):
-                    r = fetch(rec.url)
+                # a store replay does not pace
+                for rec in paced_rows(pdf, start, honor_schedule=live):
+                    r = fetch(rec.url) if live else _stored_response(rec)
                     html = r["html"] or ""
                     analyzed = (r["status_code"] == 200
                                 and "text/html" in r["content_type"].lower())
@@ -247,6 +431,8 @@ class CrawlEngine:
                         "crawl_seq": rec.crawl_seq, "url": rec.url,
                         "depth": rec.depth, "priority": rec.priority,
                         "round": rec.round,
+                        # content hash feeds the recrawl cache (reference
+                        # artifact cache/<domain>_cache.json — SURVEY §1.4)
                         "content_md5":
                             hashlib.md5(html.encode("utf-8")).hexdigest(),
                         "status_code": r["status_code"],
@@ -261,7 +447,7 @@ class CrawlEngine:
                     })
                 yield pd.DataFrame(rows)
 
-        return batch.mapInPandas(kernel, schema=out_schema)
+        return rows_in.mapInPandas(kernel, schema=out_schema)
 
     def _refresh_robots(self, candidates: DataFrame, round_id: int) -> None:
         """LIVE-mode robots.txt acquisition (north-star "robots.txt
@@ -297,9 +483,6 @@ class CrawlEngine:
             F.col("fetched_round") > round_id - cfg.robots_ttl_rounds)
         todo = hosts.join(fresh.select("host"), "host", "left_anti")
         factory = self.fetch_fn_factory
-        if factory is None:
-            from .sources.fetch import make_http_fetch
-            factory = make_http_fetch
         ua = cfg.robots_user_agent
 
         def kernel(batches):
@@ -365,25 +548,6 @@ class CrawlEngine:
                 round_id)
 
     @staticmethod
-    def _fill_missing(batch: DataFrame, result_found: DataFrame) -> DataFrame:
-        """404-fill for batch urls absent from the store, shaped exactly like
-        the checkpointed found-result (analysis struct included, as null)."""
-        analysis_type = result_found.schema["analysis"].dataType
-        missing = batch.join(result_found.select("url"), "url", "left_anti")
-        return (
-            missing
-            .withColumn("status_code", F.lit(404))
-            .withColumn("content_type", F.lit(""))
-            .withColumn("final_url", F.col("url"))
-            .withColumn("response_time_ms", F.lit(0.0))
-            .withColumn("content_length", F.lit(0).cast("long"))
-            .withColumn("headers",
-                        F.create_map().cast("map<string,string>"))
-            .withColumn("content_md5", F.md5(F.lit("")))
-            .withColumn("analysis", F.lit(None).cast(analysis_type))
-            .select(*result_found.columns))
-
-    @staticmethod
     def _filtered_from(result: DataFrame) -> DataFrame:
         return (result
                 .select("round",
@@ -395,7 +559,161 @@ class CrawlEngine:
                 .select(F.col("f.url").alias("url"),
                         F.col("f.reason").alias("reason"), "round"))
 
-    # ------------------------------------------------------------------
+    def _admit(self, fetched: DataFrame, seen: DataFrame, bloom_active: bool,
+               round_id: int) -> DataFrame:
+        """The round's new links: candidate links, J1 (Bloom prune + exact
+        anti-join vs seen), then robots."""
+        # posexplode keeps page order; rows without analysis (errors,
+        # misses, non-html) have no links
+        candidates = (
+            fetched
+            .filter(F.col("analysis").isNotNull())
+            .select(F.col("crawl_seq").alias("parent_seq"),
+                    F.col("depth").alias("parent_depth"),
+                    F.posexplode_outer(F.col("analysis.links"))
+                    .alias("link_pos", "url"))
+            .filter(F.col("url").isNotNull())
+        )
+        # within-round first occurrence wins (reference: first add_url
+        # registers, later ones are duplicates — url_manager.py:207-220).
+        # min(struct) is the lexicographic first (parent_seq, link_pos)
+        # per url — same rows a row_number window selects, but as an
+        # aggregate it gets MAP-SIDE partial combine: within-partition
+        # duplicates collapse before the shuffle, which a window can
+        # never do.
+        candidates = (candidates
+                      .groupBy("url")
+                      .agg(F.min(F.struct("parent_seq", "link_pos",
+                                          "parent_depth")).alias("_f"))
+                      .select("url", "_f.parent_seq", "_f.link_pos",
+                              "_f.parent_depth"))
+        if bloom_active:
+            new_links = self.bloom.prune_new(candidates, seen)
+        else:
+            new_links = candidates.join(seen.select("url"), "url",
+                                        "left_anti")
+        if self.config.fetch_robots:
+            # live robots acquisition gates admission alongside any
+            # injected static rules (allow-all for unknown hosts)
+            self._refresh_robots(new_links, round_id)
+            new_links = filter_allowed(
+                new_links, self._robots_dynamic.select("host", "rules"))
+        return filter_allowed(new_links, self.robots)
+
+    def _number(self, new_links: DataFrame, s: LoopState,
+                batch_count: int) -> tuple[DataFrame, int]:
+        """Deterministic discovery_seq: the new frontier rows and their
+        count.
+
+        Sequence = rank in (parent_seq, link_pos) order. Small rounds use
+        a window (one task, cheap); large rounds use the distributed
+        prefix-sum construction (repartitionByRange + per-partition
+        offsets, operators/sequence.py) — a global window would funnel
+        millions of candidates through a single reducer at the 10^10
+        design point."""
+        cfg = self.config
+        order_cols = [F.asc("parent_seq"), F.asc("link_pos")]
+        new_links = new_links.select("url", "parent_seq", "link_pos",
+                                     "parent_depth")
+        if batch_count >= cfg.seq_window_threshold:
+            # big-round regime (dequeue size is the cheap proxy for the
+            # candidate count): ONE pinned prefix-sum pass both numbers the
+            # links and yields the enqueue count — no separate checkpoint
+            # or count job. parent_seq is contiguous in
+            # [results_count, results_count + batch_count), so the
+            # order-monotone bucket is pure arithmetic — no
+            # repartitionByRange sampling job, which would re-evaluate the
+            # whole explode→dedup→prune pipeline a second time. 4× buckets
+            # per partition so hash placement stays balanced.
+            from .operators.sequence import global_sequence_arith
+            n_buckets = 4 * self.n_parts
+            pid = F.floor(
+                (F.col("parent_seq") - F.lit(s.results_count).cast("long"))
+                * F.lit(n_buckets) / F.lit(batch_count))
+            numbered, enqueued = global_sequence_arith(
+                new_links, pid, order_cols, "discovery_seq",
+                start=s.next_discovery_seq, num_partitions=self.n_parts,
+                with_total=True)
+        else:
+            # small rounds: checkpoint + observed count + one-task window
+            from pyspark.sql import Observation
+            obs = Observation()  # auto-named: unique across rounds/runs
+            new_links = (new_links
+                         .observe(obs, F.count(F.lit(1)).alias("n"))
+                         .localCheckpoint(eager=True))
+            enqueued = int(obs.get["n"])
+            seq_w = Window.orderBy(*order_cols)
+            numbered = new_links.withColumn(
+                "discovery_seq",
+                F.row_number().over(seq_w).cast("long") - 1
+                + F.lit(s.next_discovery_seq).cast("long"))
+        new_frontier = (
+            numbered
+            .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
+            .withColumn("priority",
+                        (is_priority_col(F.col("url"), cfg.priority_patterns)
+                         if cfg.smart else F.lit(False)).cast("int"))
+            .withColumn("round_added", F.lit(s.round_id + 1))
+            .select("url", "depth", "priority", "discovery_seq",
+                    "round_added")
+        )
+        return new_frontier, enqueued
+
+    def _merge(self, s: LoopState, fetched: DataFrame, result: DataFrame,
+               undequeued: DataFrame | None, new_frontier: DataFrame,
+               batch_count: int, enqueued: int) -> DataFrame:
+        """The round's MERGE INTO, in memory: carry ``s`` into the next
+        round (frontier, seen, result parts, counters); returns the
+        round's new seen rows.
+
+        Big-path rounds reuse the dequeue ranking's complement (narrow
+        filter over the pinned rank checkpoint) and leave the merged
+        frontier LAZY: both union inputs are narrow over this round's
+        checkpoints (rank ckpt / seq ckpt), so lineage depth stays 1, and
+        the next round's dequeue range-shuffles the frontier anyway —
+        materializing it here would add a full frontier shuffle+pin job
+        per round that the dequeue immediately re-arranges (r6: measured
+        ~0.4 s/round at the 30k-batch bench shape, removed). Small-path
+        rounds anti-join the dequeued urls (the checkpointed fetch_parse
+        output holds exactly one row per batch url) but leave the merged
+        frontier LAZY too, compacting every seen_compact_every rounds like
+        the seen set: between compactions the next dequeue's TakeOrdered
+        re-evaluates ≤K stacked anti-join layers, each narrow over pinned
+        inputs, so lineage depth is bounded by the cadence instead of
+        growing per round — and the per-round full-frontier shuffle+pin
+        job is gone (r6 session 3: ~0.3 s/round at the 800-batch bench
+        shape). No anti-join against the frontier is needed for the
+        insert: new_frontier urls were pruned against seen, and frontier
+        ⊆ seen (oracle-differential tested)."""
+        new_seen = new_frontier.select(
+            "url", F.md5(F.col("url")).alias("url_md5"))
+        compact = (s.round_id + 1) % self.config.seen_compact_every == 0
+        if undequeued is not None:
+            s.frontier = undequeued.unionByName(new_frontier)
+        else:
+            remaining = s.frontier.join(F.broadcast(fetched.select("url")),
+                                        "url", "left_anti")
+            s.frontier = remaining.unionByName(new_frontier)
+            if compact:
+                s.frontier = (s.frontier.repartition(self.n_parts, "url")
+                              .localCheckpoint(eager=True))
+        # seen grows as a lazy union of per-round parts — each part is
+        # narrow over an already-checkpointed round output, so lineage
+        # depth stays 1 and no extra materialization job runs; the union
+        # is compacted (checkpointed + repartitioned) periodically to
+        # bound plan size.
+        s.seen = s.seen.unionByName(new_seen)
+        if compact:
+            s.seen = (s.seen.repartition(self.n_parts, "url")
+                      .localCheckpoint(eager=True))
+        s.results_parts.append(result)
+        s.filtered_parts.append(self._filtered_from(result))
+        s.results_count += batch_count
+        s.next_discovery_seq += enqueued
+        s.frontier_count += enqueued - batch_count
+        s.seen_count += enqueued
+        return new_seen
+
     def _filter_covered_round(self) -> int:
         """Last round whose urls the seen filter is KNOWN to contain
         (persisted in the filter's own manifest counters, so it rides
@@ -419,16 +737,13 @@ class CrawlEngine:
         MERGE INTO result (dequeued batch deleted, new links inserted),
         already computed in memory. ``seen`` is fast-appended: only this
         round's ``new_seen`` is written (round 0, having no parent
-        snapshot, writes the whole seed + round-0 set). Cooperative writers
-        stage plain full snapshots instead, which their commit promotes."""
+        snapshot, writes the whole seed + round-0 set)."""
         store = self.store
         store.write("results", result, round_id)
         if robots is not None:
             store.write("robots", robots, round_id)
         store.write("frontier", frontier, round_id)
-        if store.writer_id is not None:
-            store.write("seen", seen, round_id)
-        elif round_id == 0:
+        if round_id == 0:
             store.append("seen", seen, round_id)
         else:
             store.append("seen", new_seen, round_id,
@@ -436,53 +751,10 @@ class CrawlEngine:
         store.commit_round(round_id, counters)
 
     # ------------------------------------------------------------------
-    def _load_committed_state(self) -> dict:
-        """Reconstruct the full per-round loop state from the manifest's
-        committed round — the resume path, and the rebase target for a
-        cooperative writer that lost a commit race."""
-        manifest = self.store.manifest()
-        last, c = manifest["round"], manifest["counters"]
-        frontier = self.store.read(self.spark, "frontier", last) \
-            .localCheckpoint(eager=True)
-        seen = self.store.read(self.spark, "seen", last) \
-            .localCheckpoint(eager=True)
-        results_parts, filtered_parts = [], []
-        for r in range(last + 1):
-            part = self.store.read(self.spark, "results", r)
-            results_parts.append(part)
-            filtered_parts.append(self._filtered_from(part))
-        # live-robots state is part of the replayed inputs: without it a
-        # resumed round would take the unlimited-rps fast path (breaking
-        # bit-identical resume) and ignore learned Crawl-delays until the
-        # next TTL refetch
-        # Missing robots snapshot = crawl ran without live robots, nothing
-        # to restore. A PRESENT-but-unreadable one must NOT degrade to
-        # no-robots state (the resumed round would take the unlimited-rps
-        # fast path and ignore learned Crawl-delays) — let the read error
-        # propagate.
-        if self.store.has_table("robots", last):
-            self._robots_dynamic = self.store.read(
-                self.spark, "robots", last).localCheckpoint(eager=True)
-            self._robots_delay_count = self._robots_dynamic.filter(
-                F.col("crawl_delay").isNotNull()).count()
-        return dict(frontier=frontier, seen=seen,
-                    results_parts=results_parts,
-                    filtered_parts=filtered_parts,
-                    results_count=c["results_total"],
-                    next_discovery_seq=c["next_discovery_seq"],
-                    frontier_count=c["frontier_after"],
-                    seen_count=c["seen_total"],
-                    round_id=last + 1)
-
     def run(self, resume: bool = False) -> CrawlState:
         """Run the crawl; with ``resume=True`` continue from the last
         committed snapshot round (bit-identical to an uninterrupted run —
         every per-round input is reconstructed from the snapshot store).
-
-        With ``config.writer_id`` set (cooperative mode) the engine JOINS
-        the shared crawl: it resumes from the committed round if one
-        exists, commits rounds synchronously, and on losing a commit race
-        aborts its staged round and rebases onto the winner's state.
 
         The round tails run on two background threads (filter insert,
         snapshot publish). Leaving the pool waits for both, so a failing
@@ -493,20 +765,8 @@ class CrawlEngine:
 
     def _run(self, resume: bool, tail: ThreadPoolExecutor) -> CrawlState:
         cfg = self.config
-        cooperative = self.store is not None and cfg.writer_id is not None
-        if cooperative:
-            # cross-writer politeness budget: every cooperative writer
-            # redundantly fetches the round, so each schedules at
-            # rps/n_registered — the COMBINED per-host rate stays within
-            # the single-writer budget. Registration precedes the first
-            # fetch; the registry persists (a dead writer keeps its slot,
-            # which only makes the combined rate more conservative).
-            self.store.register_writer()
-        results_parts: list[DataFrame] = []
-        filtered_parts: list[DataFrame] = []
+        s = self._start(resume)
         rounds: list[dict] = []
-        n_parts = self.spark.sparkContext.defaultParallelism
-
         # the in-flight tails: the filter's insert/backfill and the publish
         filter_job: Future | None = None
         publish_job: Future | None = None
@@ -518,81 +778,26 @@ class CrawlEngine:
                 job.result()
             return time.monotonic() - t
 
-        manifest = None
-        if self.store is not None and (resume or cooperative):
-            if not cooperative:
-                # reclaim markers orphaned by a crash between marker claim
-                # and manifest publish (we are the single resuming writer —
-                # cooperative writers must NOT do this: a peer may be
-                # mid-commit, its claimed marker is not an orphan)
-                self.store.recover_incomplete()
-            manifest = self.store.manifest()
-        if manifest is not None:
-            st = self._load_committed_state()
-            frontier, seen = st["frontier"], st["seen"]
-            results_parts, filtered_parts = (st["results_parts"],
-                                             st["filtered_parts"])
-            results_count = st["results_count"]
-            next_discovery_seq = st["next_discovery_seq"]
-            frontier_count = st["frontier_count"]
-            seen_count = st["seen_count"]
-            round_id = st["round_id"]
-            # A reopened filter is only trustworthy if it covers every
-            # committed round: a writer that crashed and rejoined has
-            # filter state from ITS last round, but peers (or a later
-            # single-writer run) committed rounds while it was down — a
-            # bloom miss on one of their urls is a definite-negative that
-            # bypasses the exact anti-join and duplicates the crawl.
-            # Covered ≥ manifest round ⇒ superset of the committed seen
-            # set (extra aborted-round urls only cost false positives,
-            # which the exact join absorbs). Anything less ⇒ reset; the
-            # activation-time backfill rebuilds from the committed seen.
-            if (self.bloom.n_inserted
-                    and self._filter_covered_round() < manifest["round"]):
-                self.bloom.reset()
-        else:
-            # fresh run: a stale store/filter from a previous run over the
-            # same checkpoint dir must not leak into this one — old commit
-            # markers would refuse round 0, and a stale seen filter lacking
-            # this run's urls would produce FALSE NEGATIVES (duplicates)
-            # through the skipped backfill. Reset UNCONDITIONALLY (not only
-            # when a manifest exists): a run that died in round 0 between
-            # the O_EXCL marker claim and the manifest publish leaves a
-            # marker with NO manifest, which would still refuse round 0.
-            # Cooperative writers never reset: a peer may already be
-            # mid-commit of round 0 — they seed identically (deterministic)
-            # and let the commit race pick the winner.
-            if self.store is not None and not cooperative:
-                self.store.reset()
-            if self.bloom.n_inserted:
-                self.bloom.reset()
-            frontier, seen, n_seeds = self._seed_frontier()
-            frontier = frontier.localCheckpoint(eager=True)
-            seen = seen.localCheckpoint(eager=True)
-            results_count = 0
-            next_discovery_seq = n_seeds
-            frontier_count = n_seeds
-            seen_count = n_seeds
-            round_id = 0
-        bloom_active = False
+        def ms(a, b):
+            return round((b - a) * 1000, 1)
 
-        while frontier_count > 0 and results_count < cfg.max_urls:
+        bloom_active = False
+        while s.frontier_count > 0 and s.results_count < cfg.max_urls:
             t0 = time.monotonic()
-            t_join = 0.0  # this round's waits on background tails
-            budget = min(cfg.batch_size, cfg.max_urls - results_count)
+            budget = min(cfg.batch_size, cfg.max_urls - s.results_count)
             # no count() job: the dequeue takes exactly min(budget, frontier)
             # rows — frontier_count is exact by arithmetic (unique urls).
-            batch_count = min(budget, frontier_count)
+            batch_count = min(budget, s.frontier_count)
 
-            # --- Bloom activation --------------------------------------------
-            # The Bloom prefilter is the 10^10-scale scan-saver; below the
-            # threshold its build/probe jobs cost more than the plain
-            # anti-join, so it stays cold (exactness is identical either
-            # way — the prune only bypasses join probes). Activation needs
-            # only the counters, so the backfill starts here and overlaps
-            # dequeue and fetch+parse; the probe joins it.
-            if (not bloom_active and seen_count >= cfg.bloom_min_seen
-                    and seen_count
+            # Bloom activation: the prefilter is the 10^10-scale
+            # scan-saver; below the threshold its build/probe jobs cost
+            # more than the plain anti-join, so it stays cold (exactness
+            # is identical either way — the prune only bypasses join
+            # probes). Activation needs only the counters, so the backfill
+            # starts here and overlaps dequeue and fetch_parse; the probe
+            # joins it.
+            if (not bloom_active and s.seen_count >= cfg.bloom_min_seen
+                    and s.seen_count
                     >= cfg.bloom_seen_batch_ratio * batch_count):
                 # backfill once — unless the reopened file-backed filter
                 # already carries state (resume path). A crash between the
@@ -604,326 +809,50 @@ class CrawlEngine:
                     # `seen` is the state entering this round ⇒ the filter
                     # will cover everything through round_id - 1
                     filter_job = tail.submit(self.bloom.add_urls,
-                                             seen.select("url"),
-                                             covered_round=round_id - 1)
+                                             s.seen.select("url"),
+                                             covered_round=s.round_id - 1)
                 bloom_active = True
 
-            # --- O1/O3: deterministic dequeue --------------------------------
-            # Small budgets: TakeOrderedAndProject + one-task window (the
-            # merge task holds ≤ budget rows). Large budgets: the same total
-            # order via the distributed prefix-sum — rank the frontier in
-            # (priority DESC, discovery_seq ASC) order with no single
-            # reducer, take rank < budget. Identical batch either way.
-            dequeue_order = [F.desc("priority"), F.asc("discovery_seq")]
-            undequeued = None
-            if budget >= cfg.seq_window_threshold:
-                from .operators.sequence import global_sequence
-                ranked = global_sequence(frontier, dequeue_order, "_rank")
-                batch = (ranked
-                         .filter(F.col("_rank") < budget)
-                         .withColumn("crawl_seq",
-                                     (F.col("_rank") + F.lit(results_count))
-                                     .cast("long"))
-                         .drop("_rank")
-                         .withColumn("round", F.lit(round_id)))
-                # the rank's complement IS the post-dequeue frontier — a
-                # narrow filter over the same pinned ranking, replacing the
-                # per-round broadcast-anti-join of the dequeued urls
-                # against the full frontier in the in-memory merge below
-                undequeued = (ranked.filter(F.col("_rank") >= budget)
-                              .drop("_rank"))
-            else:
-                batch = (frontier.orderBy(*dequeue_order).limit(budget))
-                w = Window.orderBy(*dequeue_order)
-                batch = (batch
-                         .withColumn("crawl_seq",
-                                     F.row_number().over(w).cast("long") - 1
-                                     + F.lit(results_count).cast("long"))
-                         .withColumn("round", F.lit(round_id)))
+            batch, undequeued = self._dequeue(s, budget)
             t_dequeue = time.monotonic()
 
-            # --- S2: per-host politeness schedule ------------------------------
-            # At "unlimited" rate budgets (≥1e8 rps — benchmark / offline
-            # replay mode) every offset is ~0: skip the per-host rank window
-            # and project constant slots. Identical crawl semantics — the
-            # schedule only TIMES fetches, never orders results.
-            host_delays = None
-            if self._robots_dynamic is not None and self._robots_delay_count:
-                # robots Crawl-delay overrides: a host's interval becomes
-                # max(1/rps, crawl_delay) — forces the real schedule even
-                # in unlimited-rps replay mode
-                host_delays = (self._robots_dynamic
-                               .filter(F.col("crawl_delay").isNotNull())
-                               .select("host",
-                                       F.col("crawl_delay")
-                                       .alias("crawl_delay_s")))
-            eff_rps = cfg.requests_per_second
-            if cooperative and cfg.requests_per_second < 1e8:
-                # rps split across registered writers (see run() preamble);
-                # re-read per round so a writer joining mid-crawl tightens
-                # the split from the next round boundary. Only FINITE
-                # budgets split: dividing the unlimited sentinel (≥1e8)
-                # is meaningless and would knock a cooperative replay off
-                # the zero-offset fast path (r5 advisor finding)
-                n_w = len(self.store.registered_writers())
-                if n_w > 1:
-                    eff_rps = cfg.requests_per_second / n_w
-            if eff_rps >= 1e8 and host_delays is None:
-                from .operators.politeness import with_host
-                batch = (with_host(batch)
-                         .withColumn("fetch_slot", F.lit(0).cast("long"))
-                         .withColumn("scheduled_offset_ms", F.lit(0.0)))
-            else:
-                batch = schedule_fetches(batch, eff_rps,
-                                         host_delays=host_delays)
-
-            # --- J4: salted host repartition — one hot host's fetches spread
-            # over salt buckets (each row keeps its politeness slot, so the
-            # rate budget still holds; the skew kill is for fetch/parse work)
-            if cfg.host_salt_buckets > 1:
-                from .operators.politeness import salted_repartition
-                batch = salted_repartition(
-                    batch, cfg.host_salt_buckets).drop("host_salt")
-            if self.pages is not None:
-                # Store mode reads the scheduled batch more than once: the
-                # fetch join, _fill_missing (and so every consumer of the
-                # round's result — the results write, state.results) and
-                # the frontier delete. Pinning it past the per-host window
-                # and the salt exchange keeps any of them from rerunning
-                # those. The pin is lazy: the fetch stage's broadcast build
-                # materializes it inside its own job. LIVE mode needs none
-                # — the fused kernel is the batch's only consumer.
-                batch = batch.localCheckpoint(eager=False)
-
-            # --- S1: fetch + F6/F7 gates + parse/analyze -----------------------
-            # ONE streamed pass over the page store: found rows are parsed and
-            # checkpointed; network-404 rows are synthesized afterwards from
-            # the two checkpointed sides and appended lazily (narrow ops over
-            # pinned inputs — deterministic, no extra materialization job).
-            if self.pages is None:
-                # LIVE: fused fetch+parse/analyze — html stays python-side
-                result_found = self._fused_live_round(
-                    batch, cfg.max_depth).localCheckpoint(eager=True)
-            else:
-                fetched = self._fetch(batch)
-                analyzed_cond = ((F.col("status_code") == 200)
-                                 & F.lower(F.col("content_type"))
-                                 .contains("text/html"))
-                want_links = analyzed_cond & (F.col("depth") < cfg.max_depth)
-                analysis = analysis_column(
-                    F.when(analyzed_cond, F.col("html")).otherwise(F.lit("")),
-                    F.col("url"), want_links, self.base_domain)
-                result_found = (
-                    fetched
-                    .withColumn("analysis",
-                                F.when(analyzed_cond, analysis)
-                                .otherwise(F.lit(None)))
-                    # content hash feeds the recrawl cache (reference
-                    # artifact cache/<domain>_cache.json — SURVEY §1.4)
-                    .withColumn("content_md5", F.md5(F.col("html")))
-                    .select("crawl_seq", "url", "depth", "priority", "round",
-                            "content_md5",
-                            "status_code",
-                            F.split(F.col("content_type"), ";").getItem(0)
-                            .alias("content_type"),
-                            "final_url", "response_time_ms", "content_length",
-                            "headers", "host", "fetch_slot",
-                            "scheduled_offset_ms",
-                            "analysis")
-                ).localCheckpoint(eager=True)
-            if self.pages is None:
-                # the fused live kernel emitted a row for EVERY batch url
-                # (network errors come back as status rows) — no 404 fill,
-                # and downstream consumers use the checkpointed result as
-                # the dequeued-url set
-                result = result_found
-            else:
-                result = result_found.unionByName(
-                    self._fill_missing(batch, result_found))
-            dequeued_urls = (result_found.select("url") if self.pages is None
-                             else batch.select("url"))
+            fetched = self._fetch_parse(
+                self._schedule(batch)).localCheckpoint(eager=True)
             # P2 plug-in analyzers: column pipelines over the round's result
+            result = fetched
             for analyzer_fn in self.analyzers:
                 result = analyzer_fn(result)
-            results_parts.append(result)
-            results_count += batch_count
             t_fetch = time.monotonic()
 
-            # --- JOIN 1: the probe below must see every url registered so
-            # far — wait for the previous round's insert (or this round's
-            # activation backfill)
-            t_join += join(filter_job)
+            # JOIN 1: the probe must see every url registered so far — wait
+            # for the previous round's insert (or this round's backfill)
+            t_join = join(filter_job)
             filter_job = None
             t_joined = time.monotonic()
 
-            # --- filtered-log append (per occurrence, reference semantics) ----
-            filtered_parts.append(self._filtered_from(result))
-
-            # --- candidate links: posexplode keeps page order ------------------
-            # (missing rows have null analysis — candidates come straight off
-            # the checkpointed found-result)
-            candidates = (
-                result_found
-                .filter(F.col("analysis").isNotNull())
-                .select(F.col("crawl_seq").alias("parent_seq"),
-                        F.col("depth").alias("parent_depth"),
-                        F.posexplode_outer(F.col("analysis.links"))
-                        .alias("link_pos", "url"))
-                .filter(F.col("url").isNotNull())
-            )
-            # within-round first occurrence wins (reference: first add_url
-            # registers, later ones are duplicates — url_manager.py:207-220).
-            # min(struct) is the lexicographic first (parent_seq, link_pos)
-            # per url — same rows a row_number window selects, but as an
-            # aggregate it gets MAP-SIDE partial combine: within-partition
-            # duplicates collapse before the shuffle, which a window can
-            # never do.
-            candidates = (candidates
-                          .groupBy("url")
-                          .agg(F.min(F.struct("parent_seq", "link_pos",
-                                              "parent_depth")).alias("_f"))
-                          .select("url", "_f.parent_seq", "_f.link_pos",
-                                  "_f.parent_depth"))
-
-            # --- J1: bloom prune + exact anti-join, then robots -----------------
-            if bloom_active:
-                new_links = self.bloom.prune_new(candidates, seen)
-            else:
-                new_links = candidates.join(seen.select("url"), "url",
-                                            "left_anti")
-            if self.pages is None and cfg.fetch_robots:
-                # live robots acquisition gates admission alongside any
-                # injected static rules (allow-all for unknown hosts)
-                self._refresh_robots(new_links, round_id)
-                new_links = filter_allowed(
-                    new_links,
-                    self._robots_dynamic.select("host", "rules"))
-            new_links = filter_allowed(new_links, self.robots)
+            new_links = self._admit(fetched, s.seen, bloom_active, s.round_id)
             t_prune = time.monotonic()
-
-            # --- deterministic discovery_seq ------------------------------------
-            # Sequence = rank in (parent_seq, link_pos) order. Small rounds
-            # use a window (one task, cheap); large rounds use the
-            # distributed prefix-sum construction (repartitionByRange +
-            # per-partition offsets, operators/sequence.py) — a global
-            # window would funnel millions of candidates through a single
-            # reducer at the 10^10 design point.
-            order_cols = [F.asc("parent_seq"), F.asc("link_pos")]
-            new_links = new_links.select("url", "parent_seq", "link_pos",
-                                         "parent_depth")
-            if batch_count >= cfg.seq_window_threshold:
-                # big-round regime (dequeue size is the cheap proxy for the
-                # candidate count): ONE pinned prefix-sum pass both numbers
-                # the links and yields the enqueue count — no separate
-                # checkpoint or count job. parent_seq is contiguous in
-                # [results_count - batch_count, results_count), so the
-                # order-monotone bucket is pure arithmetic — no
-                # repartitionByRange sampling job, which would re-evaluate
-                # the whole explode→dedup→prune pipeline a second time.
-                # 4× buckets per partition so hash placement stays balanced.
-                from .operators.sequence import global_sequence_arith
-                seq_base = results_count - batch_count
-                n_buckets = 4 * n_parts
-                pid = F.floor(
-                    (F.col("parent_seq") - F.lit(seq_base).cast("long"))
-                    * F.lit(n_buckets) / F.lit(batch_count))
-                numbered, enqueued = global_sequence_arith(
-                    new_links, pid, order_cols, "discovery_seq",
-                    start=next_discovery_seq, num_partitions=n_parts,
-                    with_total=True)
-            else:
-                # small rounds: checkpoint + observed count + one-task window
-                from pyspark.sql import Observation
-                obs = Observation()  # auto-named: unique across rounds/runs
-                new_links = (new_links
-                             .observe(obs, F.count(F.lit(1)).alias("n"))
-                             .localCheckpoint(eager=True))
-                enqueued = int(obs.get["n"])
-                seq_w = Window.orderBy(*order_cols)
-                numbered = new_links.withColumn(
-                    "discovery_seq",
-                    F.row_number().over(seq_w).cast("long") - 1
-                    + F.lit(next_discovery_seq).cast("long"))
-            new_frontier = (
-                numbered
-                .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
-                .withColumn("priority",
-                            (is_priority_col(F.col("url"),
-                                             cfg.priority_patterns)
-                             if cfg.smart else F.lit(False)).cast("int"))
-                .withColumn("round_added", F.lit(round_id + 1))
-                .select("url", "depth", "priority", "discovery_seq",
-                        "round_added")
-            )
-            next_discovery_seq += enqueued
+            new_frontier, enqueued = self._number(new_links, s, batch_count)
             t_seq = time.monotonic()
-
-            # --- merge frontier & seen (the round's MERGE INTO, in memory) ------
-            # Both modes carry frontier and seen forward the same way; store
-            # mode publishes the result in the background tail below.
-            # Big-path rounds reuse the dequeue ranking's complement (narrow
-            # filter over the pinned rank checkpoint) and leave the merged
-            # frontier LAZY: both union inputs are narrow over this round's
-            # checkpoints (rank ckpt / seq ckpt), so lineage depth stays 1,
-            # and the next round's dequeue range-shuffles the frontier
-            # anyway — materializing it here would add a full frontier
-            # shuffle+pin job per round that the dequeue immediately
-            # re-arranges (r6: measured ~0.4 s/round at the 30k-batch bench
-            # shape, removed). Small-path rounds keep the broadcast
-            # anti-join but leave the merged frontier LAZY too, compacting
-            # every seen_compact_every rounds like the seen set: between
-            # compactions the next dequeue's TakeOrdered re-evaluates ≤K
-            # stacked anti-join layers, each narrow over pinned inputs (the
-            # round's batch ckpt broadcasts, the seq ckpt unions), so
-            # lineage depth is bounded by the cadence instead of growing
-            # per round — and the per-round full-frontier shuffle+pin job
-            # is gone (r6 session 3: ~0.3 s/round at the 800-batch bench
-            # shape). No anti-join against the frontier is needed for the
-            # insert: new_frontier urls were pruned against seen, and
-            # frontier ⊆ seen (oracle-differential tested).
-            new_seen = new_frontier.select(
-                "url", F.md5(F.col("url")).alias("url_md5"))
-            compact = (round_id + 1) % cfg.seen_compact_every == 0
-            if undequeued is not None:
-                frontier = undequeued.unionByName(new_frontier)
-            else:
-                remaining = frontier.join(F.broadcast(dequeued_urls),
-                                          "url", "left_anti")
-                frontier = remaining.unionByName(new_frontier)
-                if compact:
-                    frontier = (frontier.repartition(n_parts, "url")
-                                .localCheckpoint(eager=True))
-            # seen grows as a lazy union of per-round parts — each part is
-            # narrow over an already-checkpointed round output, so lineage
-            # depth stays 1 and no extra materialization job runs; the
-            # union is compacted (checkpointed + repartitioned)
-            # periodically to bound plan size.
-            seen = seen.unionByName(new_seen)
-            if compact:
-                seen = (seen.repartition(n_parts, "url")
-                        .localCheckpoint(eager=True))
-            frontier_count = frontier_count - batch_count + enqueued
-            seen_count += enqueued
+            new_seen = self._merge(s, fetched, result, undequeued,
+                                   new_frontier, batch_count, enqueued)
             t_merge = time.monotonic()
 
-            # --- JOIN 2: publishes commit in round order ----------------------
+            # JOIN 2: publishes commit in round order
             t_join += join(publish_job)
             publish_job = None
 
-            def ms(a, b):
-                return round((b - a) * 1000, 1)
-
             rounds.append({
-                "round": round_id, "dequeued": batch_count,
-                "enqueued": enqueued, "frontier_after": frontier_count,
-                "results_total": results_count, "seen_total": seen_count,
-                "next_discovery_seq": next_discovery_seq,
+                "round": s.round_id, "dequeued": batch_count,
+                "enqueued": enqueued, "frontier_after": s.frontier_count,
+                "results_total": s.results_count, "seen_total": s.seen_count,
+                "next_discovery_seq": s.next_discovery_seq,
                 "bloom_active": bloom_active,
                 # filter size at this round's probe
                 "bloom_inserted": self.bloom.n_inserted,
                 "bloom_rebroadcast_bytes":
                     self.bloom.last_rebroadcast_bytes,
-                "partitions": n_parts,
+                "partitions": self.n_parts,
                 # per-phase wall breakdown — the round's lineage counters;
                 # t_join_ms is the driver's wait on background tails (the
                 # last round's also carries run()'s final join)
@@ -936,86 +865,39 @@ class CrawlEngine:
                 "wall_ms": ms(t0, time.monotonic()),
             })
 
-            # --- background tail ----------------------------------------------
+            # --- background tail ----------------------------------------
             # After the final round no probe reads the filter, so the insert
             # is skipped — unless the filter is persisted, where resume
             # trusts it only if it covers the manifest round.
-            last = frontier_count <= 0 or results_count >= cfg.max_urls
+            last = s.frontier_count <= 0 or s.results_count >= cfg.max_urls
             if bloom_active and (cfg.checkpoint_dir or not last):
-                # a cooperative writer that loses the commit race below
-                # joins this insert, then resets the filter
                 filter_job = tail.submit(self.bloom.add_urls,
                                          new_frontier.select("url"),
-                                         covered_round=round_id)
+                                         covered_round=s.round_id)
             if self.store is not None:
-                # the commit gets its own copy of the counters: the final
-                # join below still adds to the round's entry
-                publish = (round_id, result, frontier, seen, new_seen,
-                           self._robots_dynamic, dict(rounds[-1]))
-                if not cooperative:
-                    # a crash while this overlaps the next round leaves the
-                    # previous round committed; resume replays from there
-                    publish_job = tail.submit(self._publish_round, *publish)
-                else:
-                    # synchronous commit: the conflict must surface BEFORE
-                    # the next round builds on uncommitted state (an
-                    # overlapped publish would detect it one round late,
-                    # wasting a second round of work per race lost)
-                    try:
-                        self._publish_round(*publish)
-                    except ConcurrentCommitError:
-                        # a LIVE peer publishes the manifest within ms of
-                        # the marker claim — wait for it rather than
-                        # reading the manifest inside that window (a
-                        # round-0 race would otherwise see manifest=None).
-                        # Timeout ⇒ the marker holder is dead: an orphaned
-                        # marker from a crashed run, not a peer — clean our
-                        # staging and fail loudly.
-                        if self.store.await_round(round_id) is None:
-                            self.store.abort_round(round_id)
-                            raise
-                        self.rebase_count += 1
-                        # rebase: drop this round's staged artifacts and
-                        # every in-memory derivation of it, reload the
-                        # winner's committed state, and continue from there
-                        self.store.abort_round(round_id)
-                        rounds.pop()
-                        st = self._load_committed_state()
-                        frontier, seen = st["frontier"], st["seen"]
-                        results_parts = st["results_parts"]
-                        filtered_parts = st["filtered_parts"]
-                        results_count = st["results_count"]
-                        next_discovery_seq = st["next_discovery_seq"]
-                        frontier_count = st["frontier_count"]
-                        seen_count = st["seen_count"]
-                        round_id = st["round_id"]
-                        join(filter_job)
-                        filter_job = None
-                        if bloom_active or self.bloom.n_inserted:
-                            # the filter carries our aborted rounds' urls
-                            # but may MISS urls the winner committed — a
-                            # missing url is a definite-negative (duplicate
-                            # crawl), so rebuild from the committed seen at
-                            # reactivation
-                            self.bloom.reset()
-                        bloom_active = False
-                        continue
-            round_id += 1
+                # publish: a crash while this overlaps the next round
+                # leaves the previous round committed; resume replays from
+                # there. The commit gets its own copy of the counters: the
+                # final join below still adds to the round's entry.
+                publish_job = tail.submit(
+                    self._publish_round, s.round_id, result, s.frontier,
+                    s.seen, new_seen, self._robots_dynamic, dict(rounds[-1]))
+            s.round_id += 1
 
         # the last round's tails must land before the state is returned
         waited = join(filter_job) + join(publish_job)
         if rounds:
             rounds[-1]["t_join_ms"] += round(waited * 1000, 1)
             rounds[-1]["wall_ms"] += round(waited * 1000, 1)
-        results = results_parts[0]
-        for part in results_parts[1:]:
+        results = s.results_parts[0]
+        for part in s.results_parts[1:]:
             results = results.unionByName(part)
-        filtered = filtered_parts[0] if filtered_parts else None
-        for part in filtered_parts[1:]:
+        filtered = s.filtered_parts[0] if s.filtered_parts else None
+        for part in s.filtered_parts[1:]:
             filtered = filtered.unionByName(part)
         crawl_order = results.select("crawl_seq", "url", "depth",
                                      (F.col("priority") == 1).alias("priority"),
                                      "round")
-        return CrawlState(results=results, frontier=frontier, seen=seen,
+        return CrawlState(results=results, frontier=s.frontier, seen=s.seen,
                           filtered=filtered, rounds=rounds,
                           crawl_order=crawl_order)

@@ -32,6 +32,15 @@ FETCH_SCHEMA = ("url string, status_code int, content_type string, "
 FetchFn = Callable[[str], dict]
 
 
+def miss_response(url: str) -> dict:
+    """The response for a url the origin has no page for: the network 404
+    row both fetch modes emit (a page-store miss, or an unknown url at a
+    synthetic origin)."""
+    return {"status_code": 404, "content_type": "", "final_url": url,
+            "response_time_ms": 0.0, "content_length": 0, "html": "",
+            "headers": {}}
+
+
 def paced_rows(pdf: pd.DataFrame, start: float, honor_schedule: bool = True):
     """Yield an Arrow batch's rows in politeness-schedule order, sleeping
     until each row's ``scheduled_offset_ms`` relative to ``start``.

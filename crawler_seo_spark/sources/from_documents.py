@@ -13,6 +13,7 @@ Deterministic, no RNG: every page is a pure function of its document row.
 
 from __future__ import annotations
 
+from ..sources.fetch import miss_response
 from ..sources.synthetic_site import BASE, DOMAIN
 
 SEED_URL = f"{BASE}/"
@@ -142,9 +143,7 @@ def live_fetch_factory(n_docs: int, text_fn=synthetic_text):
         def fetch(url: str) -> dict:
             did = doc_id_from_url(url)
             if did is None or did >= n_docs:
-                return {"status_code": 404, "content_type": "",
-                        "final_url": url, "response_time_ms": 0.0,
-                        "content_length": 0, "html": "", "headers": {}}
+                return miss_response(url)
             rec = page_from_document(did, text_fn(did), n_docs)
             return {k: rec[k] for k in
                     ("status_code", "content_type", "final_url",

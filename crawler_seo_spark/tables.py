@@ -206,37 +206,10 @@ class SnapshotStore:
         — each round's write overwrites its own dir, and unreferenced dirs
         are garbage exactly as after a rollback."""
         shutil.rmtree(os.path.join(self.root, "rounds"), ignore_errors=True)
-        shutil.rmtree(os.path.join(self.root, "writers"),
-                      ignore_errors=True)
         try:
             os.remove(self._manifest_path)
         except FileNotFoundError:
             pass
-
-    # -- cooperative-writer registry ---------------------------------------
-    def register_writer(self, writer_id: str | None = None) -> None:
-        """Record a cooperative writer in the shared registry (one marker
-        file per id — no read-modify-write contention). The registry
-        divides the politeness budget: each of n registered writers
-        schedules at ``rps/n`` so the COMBINED per-host request rate stays
-        within the budget a single writer honors (r4 verdict #3 — without
-        this, two writers redundantly fetching the same round double every
-        host's load). Registration is persistent: a crashed writer stays
-        counted (its rejoining self re-registers idempotently), keeping
-        the combined rate conservative — never above budget."""
-        wid = writer_id or self.writer_id
-        d = os.path.join(self.root, "writers")
-        os.makedirs(d, exist_ok=True)
-        open(os.path.join(d, f"{wid}.writer"), "w").close()
-
-    def registered_writers(self) -> list[str]:
-        try:
-            return sorted(n[:-len(".writer")]
-                          for n in os.listdir(os.path.join(self.root,
-                                                           "writers"))
-                          if n.endswith(".writer"))
-        except FileNotFoundError:
-            return []
 
     def rollback(self, round_id: int) -> None:
         """Reset the committed state to ``round_id`` (crash simulation /

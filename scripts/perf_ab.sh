@@ -3,56 +3,52 @@
 #
 #   scripts/perf_ab.sh BASE HEAD [WORKLOAD] [PAIRS] [SECONDS]
 #
-# Checks BASE and HEAD out as temporary git worktrees, then runs
-# `python3 perfbench/run.py --workload WORKLOAD --seed S --seconds SECONDS`
-# PAIRS times in each, alternating between them: pair i uses seed
+# Exports BASE and HEAD into temporary directories (`git archive`), then
+# runs `python3 perfbench/run.py --workload WORKLOAD --seed S --seconds
+# SECONDS` PAIRS times in each, alternating between them: pair i uses seed
 # SEED0+i on both sides, and the side that runs first alternates per pair,
 # so slow drifts in host load hit both sides alike. One run at a time.
 #
 # Prints each run's end-to-end metrics, then per metric each side's median
 # and quartiles, the per-pair HEAD/BASE ratios, their median, and how many
-# pairs HEAD won (the direction comes from BENCHMARK.json). Exits 1 when any
-# run fails its oracle check.
+# pairs HEAD won (the direction comes from BENCHMARK.json). With TRACE=1 it
+# then makes one traced run (`--trace 1`) per side on seed SEED0 and prints
+# their per-layer metrics side by side. Exits 1 when any run fails its
+# oracle check.
 #
 # Defaults: WORKLOAD=durable_filtered PAIRS=5 SECONDS=10. Environment:
-# SEED0 (first seed, default 401), OUT (a file that keeps every run's JSON
-# result line, default a temporary file).
+# SEED0 (first seed, default 401), TRACE (1 adds the traced runs), OUT (a
+# file that keeps every untraced run's JSON result line, default a
+# temporary file).
 set -euo pipefail
 
 if [ $# -lt 2 ]; then
-    sed -n '2,20p' "$0" | sed 's/^# \{0,1\}//'
+    sed -n '2,22p' "$0" | sed 's/^# \{0,1\}//'
     exit 2
 fi
 base_rev=$1 head_rev=$2
 workload=${3:-durable_filtered} pairs=${4:-5} seconds=${5:-10}
-seed0=${SEED0:-401}
+seed0=${SEED0:-401} trace=${TRACE:-0}
 
 repo=$(git rev-parse --show-toplevel)
 tmp=$(mktemp -d "${TMPDIR:-/tmp}/perf_ab.XXXXXX")
 out=${OUT:-$tmp/runs.jsonl}
 
-cleanup() {
-    for side in base head; do
-        if [ -d "$tmp/$side" ]; then
-            git -C "$repo" worktree remove --force "$tmp/$side" || true
-        fi
-    done
-    git -C "$repo" worktree prune
-    rm -rf "$tmp"
-}
-trap cleanup EXIT
+trap 'rm -rf "$tmp"' EXIT
 
-git -C "$repo" worktree add --detach "$tmp/base" "$base_rev" >/dev/null
-git -C "$repo" worktree add --detach "$tmp/head" "$head_rev" >/dev/null
-echo "base $(git -C "$tmp/base" rev-parse --short HEAD)" \
-     "head $(git -C "$tmp/head" rev-parse --short HEAD)" \
+mkdir "$tmp/base" "$tmp/head"
+git -C "$repo" archive "$base_rev" | tar -x -C "$tmp/base"
+git -C "$repo" archive "$head_rev" | tar -x -C "$tmp/head"
+echo "base $(git -C "$repo" rev-parse --short "$base_rev")" \
+     "head $(git -C "$repo" rev-parse --short "$head_rev")" \
      "workload $workload, $pairs pairs, ${seconds}s per run" >&2
 
 failed=0
-run() {  # run SIDE PAIR SEED
+run() {  # run SIDE PAIR SEED [TRACE OUTFILE]
     local line status=0
     line=$(cd "$tmp/$1" && python3 perfbench/run.py --workload "$workload" \
-        --seed "$3" --seconds "$seconds" --trace 0 | tail -n 1) || status=$?
+        --seed "$3" --seconds "$seconds" --trace "${4:-0}" | tail -n 1) \
+        || status=$?
     if [ "$status" -ne 0 ]; then
         failed=1
     fi
@@ -61,7 +57,7 @@ run() {  # run SIDE PAIR SEED
         return
     fi
     printf '{"side": "%s", "pair": %d, "seed": %d, "result": %s}\n' \
-        "$1" "$2" "$3" "$line" >> "$out"
+        "$1" "$2" "$3" "$line" >> "${5:-$out}"
     echo "$1 pair $2 seed $3: $line" >&2
 }
 
@@ -75,6 +71,11 @@ for ((i = 0; i < pairs; i++)); do
         run base "$i" "$seed"
     fi
 done
+
+if [ "$trace" = 1 ]; then
+    run base 0 "$seed0" 1 "$tmp/traced.jsonl"
+    run head 0 "$seed0" 1 "$tmp/traced.jsonl"
+fi
 
 python3 - "$out" "$repo/BENCHMARK.json" <<'EOF'
 import json
@@ -115,4 +116,26 @@ for name, direction in better.items():
 bad = sum(r["result"]["failed"] for r in runs)
 print(f"failed operations: {bad} over {len(runs)} runs")
 EOF
+if [ -s "$tmp/traced.jsonl" ]; then
+    python3 - "$tmp/traced.jsonl" <<'EOF'
+import json
+import math
+import sys
+
+by = {}
+for line in open(sys.argv[1]):
+    r = json.loads(line)
+    by[r["side"]] = r
+print(f"traced run, seed {next(iter(by.values()))['seed']}")
+print(f"  {'metric':34} {'base':>14} {'head':>14}")
+names = sorted({k for r in by.values() for k in r["result"]["metrics"]})
+for name in names:
+    base, head = (by[s]["result"]["metrics"].get(name, {}).get("value",
+                                                                math.nan)
+                  if s in by else math.nan for s in ("base", "head"))
+    print(f"  {name:34} {base:14.3f} {head:14.3f}")
+print("traced failed operations: " + ", ".join(
+    f"{s} {r['result']['failed']}" for s, r in sorted(by.items())))
+EOF
+fi
 exit "$failed"

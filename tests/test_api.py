@@ -23,6 +23,23 @@ def test_validate_config():
         validate_config(CrawlConfig(seed_url="https://x.test/", max_depth=99))
 
 
+def test_engine_rejects_fetch_robots_with_page_store(spark, pages_df):
+    """Live robots acquisition has nothing to fetch from a page store; the
+    engine must refuse the setting instead of crawling without robots."""
+    from crawler_seo_spark.engine import CrawlEngine
+    with pytest.raises(ValueError, match="fetch_robots"):
+        CrawlEngine(spark, pages_df,
+                    CrawlConfig(seed_url=SEED_URL, fetch_robots=True))
+
+
+def test_engine_rejects_unknown_seen_filter(spark, pages_df):
+    """A misspelled seen filter must fail, not fall through to Bloom."""
+    from crawler_seo_spark.engine import CrawlEngine
+    with pytest.raises(ValueError, match="seen_filter"):
+        CrawlEngine(spark, pages_df,
+                    CrawlConfig(seed_url=SEED_URL, seen_filter="cukoo"))
+
+
 def test_quick_mode_caps():
     cfg = apply_quick_mode(CrawlConfig(seed_url="https://x.test/",
                                        max_urls=5000, max_depth=10))

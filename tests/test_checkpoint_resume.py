@@ -76,66 +76,6 @@ def test_fresh_run_reclaims_marker_orphaned_before_manifest(spark, pages_df):
     assert SnapshotStore(ckpt).manifest() is not None
 
 
-def test_cooperative_two_writers_match_serial(spark, pages_df):
-    """Two engines with distinct writer_ids share one store: each stages
-    its round under writer-scoped names, races on the commit marker, and
-    the loser aborts + rebases onto the winner's committed round. BOTH
-    must finish with the serial run's exact crawl, and no staged snapshot
-    artifacts may survive (every remaining data dir is referenced by a
-    committed file-list)."""
-    import json
-    import os
-    import threading
-
-    base = dict(seed_url=SEED_URL, max_urls=60, batch_size=15)
-    serial = CrawlEngine(spark, pages_df, CrawlConfig(
-        **base, checkpoint_dir=tempfile.mkdtemp(prefix="coop_serial_"))).run()
-    want = _order(serial)
-
-    ckpt = tempfile.mkdtemp(prefix="coop_ckpt_")
-    engines = [CrawlEngine(spark, pages_df, CrawlConfig(
-        **base, checkpoint_dir=ckpt, writer_id=w)) for w in ("wa", "wb")]
-    states, errors = {}, []
-
-    def runner(name, eng):
-        try:
-            states[name] = eng.run()
-        except BaseException as e:  # surfaced below
-            errors.append((name, e))
-
-    threads = [threading.Thread(target=runner, args=(f"w{i}", e))
-               for i, e in enumerate(engines)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=600)
-    assert not errors, errors
-    assert len(states) == 2
-
-    for name, st in states.items():
-        assert _order(st) == want, name
-        assert ({r["url"] for r in st.seen.collect()}
-                == {r["url"] for r in serial.seen.collect()}), name
-    # the race was actually exercised (both started together, rounds are
-    # ~seconds: at least one commit must have been lost and rebased)
-    assert sum(e.rebase_count for e in engines) >= 1
-
-    # no orphaned snapshot state: every surviving data dir is referenced
-    # by a committed (shared) file-list, and no staged file-lists remain
-    for table in ("frontier", "seen", "results"):
-        tdir = os.path.join(ckpt, table)
-        names = os.listdir(tdir)
-        assert not [n for n in names if n.count(".files.json") and
-                    n.count(".") > 2], names  # staged jsons all gone
-        referenced = set()
-        for n in names:
-            if n.endswith(".files.json"):
-                with open(os.path.join(tdir, n)) as f:
-                    referenced |= {os.path.basename(d) for d in json.load(f)}
-        dirs = {n for n in names if os.path.isdir(os.path.join(tdir, n))}
-        assert dirs <= referenced, (table, dirs - referenced)
-
-
 def test_resume_restores_live_robots_state(spark):
     """Live-robots state (rules cache + Crawl-delay) is part of the
     committed snapshot: a resumed run must replay the same per-host
@@ -185,12 +125,15 @@ def test_resume_restores_live_robots_state(spark):
 
 
 def test_rejoin_after_peer_progress_resets_stale_filter(spark, pages_df):
-    """ADVICE r4: a writer that crashes and rejoins with the same
-    writer_id reopens its writer-LOCAL seen filter with n_inserted > 0 —
-    but peers committed rounds while it was down, so the filter is
-    missing their urls. A bloom miss ('definitely new') bypasses the
-    exact anti-join, duplicating crawls. The engine must reset the filter
+    """A persisted seen filter that is behind the committed round — a
+    crash after a round's commit but before its background insert, or a
+    filter dir restored from an older copy — is missing committed urls.
+    A bloom miss ('definitely new') on one of them bypasses the exact
+    anti-join and duplicates crawls, so resume must reset the filter
     whenever its persisted covered_round predates the manifest round."""
+    import os
+    import shutil
+
     base = dict(seed_url=SEED_URL, batch_size=15,
                 bloom_min_seen=5, bloom_seen_batch_ratio=0)
     serial = CrawlEngine(spark, pages_df, CrawlConfig(
@@ -199,24 +142,29 @@ def test_rejoin_after_peer_progress_resets_stale_filter(spark, pages_df):
     want = _order(serial)
 
     ckpt = tempfile.mkdtemp(prefix="rejoin_ckpt_")
-    # writer wa crawls rounds 0-3, then "crashes" (engine discarded).
-    # Intermediate budgets sit exactly on the serial run's round
-    # boundaries (cumulative dequeues 1,6,13,28,43,58,60) — round cuts
-    # depend on remaining budget, so misaligned budgets would be a
-    # different crawl by definition, not a resume.
+    filter_dir = os.path.join(ckpt, "seen_filter")
+    saved = tempfile.mkdtemp(prefix="rejoin_filter_") + "/seen_filter"
+    # Budgets sit exactly on the serial run's round boundaries
+    # (cumulative dequeues 1,6,13,28,43,58,60) — round cuts depend on
+    # remaining budget, so misaligned budgets would be a different crawl
+    # by definition, not a resume.
     CrawlEngine(spark, pages_df, CrawlConfig(
-        **base, max_urls=28, checkpoint_dir=ckpt, writer_id="wa")).run()
-    # peer wb advances the shared crawl one more round while wa is down
+        **base, max_urls=28, checkpoint_dir=ckpt)).run()
+    shutil.copytree(filter_dir, saved)
+    # one more committed round, then the filter goes back to its copy
     CrawlEngine(spark, pages_df, CrawlConfig(
-        **base, max_urls=43, checkpoint_dir=ckpt, writer_id="wb")).run()
+        **base, max_urls=43, checkpoint_dir=ckpt)).run(resume=True)
+    shutil.rmtree(filter_dir)
+    shutil.copytree(saved, filter_dir)
 
-    # wa rejoins: its seen_filter.wa state covers rounds 0-1 only
-    rejoin = CrawlEngine(spark, pages_df, CrawlConfig(
-        **base, max_urls=60, checkpoint_dir=ckpt, writer_id="wa"))
-    assert rejoin.bloom.n_inserted > 0          # stale state reopened...
-    assert rejoin._filter_covered_round() < \
+    resumed = CrawlEngine(spark, pages_df, CrawlConfig(
+        **base, max_urls=60, checkpoint_dir=ckpt))
+    assert resumed.bloom.n_inserted > 0          # stale state reopened...
+    assert resumed._filter_covered_round() < \
         SnapshotStore(ckpt).manifest()["round"]  # ...and provably behind
-    st = rejoin.run()
+    epoch = resumed.bloom.meta.epoch
+    st = resumed.run(resume=True)
+    assert resumed.bloom.meta.epoch != epoch     # the filter was reset
     assert _order(st) == want                    # no duplicate crawls
     assert ({r["url"] for r in st.seen.collect()}
             == {r["url"] for r in serial.seen.collect()})
@@ -291,59 +239,6 @@ def test_resume_corrupt_robots_snapshot_raises(spark):
     with pytest.raises(Exception):
         CrawlEngine(spark, None, cfg,
                     fetch_fn_factory=factory).run(resume=True)
-
-
-def test_cooperative_writers_split_politeness_budget(spark):
-    """VERDICT r4 #3: cooperative writers each redundantly fetch the
-    round, so each must schedule at rps/n_registered — the COMBINED
-    per-host request rate stays within the single-writer budget. With two
-    registered writers and rps=10, each writer's per-host schedule must
-    space consecutive fetches >= 200 ms (2/rps), i.e. each honors half
-    the budget."""
-    from collections import defaultdict
-
-    from crawler_seo_spark.sources.from_documents import (
-        SEED_URL as DOC_SEED, live_fetch_factory)
-
-    ckpt = tempfile.mkdtemp(prefix="coop_rps_")
-    store = SnapshotStore(ckpt, writer_id="wb")
-    store.register_writer()            # peer registered before wa starts
-
-    cfg = CrawlConfig(seed_url=DOC_SEED, max_urls=45, batch_size=15,
-                      requests_per_second=10.0, checkpoint_dir=ckpt,
-                      writer_id="wa")
-    st = CrawlEngine(spark, None, cfg,
-                     fetch_fn_factory=live_fetch_factory(150)).run()
-
-    assert sorted(SnapshotStore(ckpt).registered_writers()) == ["wa", "wb"]
-    rows = st.results.select("url", "round",
-                             "scheduled_offset_ms").collect()
-    from urllib.parse import urlparse
-    per_host = defaultdict(list)
-    for r in rows:
-        per_host[(r["round"], urlparse(r["url"]).netloc)].append(
-            r["scheduled_offset_ms"])
-    multi = 0
-    for offs in per_host.values():
-        offs.sort()
-        for a, b in zip(offs, offs[1:]):
-            multi += 1
-            assert b - a >= 200.0 - 1e-6, (a, b)  # 2/rps seconds apart
-    assert multi > 0  # some host actually had >1 fetch in a round
-
-    # single registered writer ⇒ full budget (100 ms spacing)
-    ckpt2 = tempfile.mkdtemp(prefix="solo_rps_")
-    cfg2 = CrawlConfig(seed_url=DOC_SEED, max_urls=30, batch_size=15,
-                       requests_per_second=10.0, checkpoint_dir=ckpt2,
-                       writer_id="wa")
-    st2 = CrawlEngine(spark, None, cfg2,
-                      fetch_fn_factory=live_fetch_factory(150)).run()
-    offs2 = sorted(r["scheduled_offset_ms"]
-                   for r in st2.results.select("url", "round",
-                                               "scheduled_offset_ms")
-                   .filter("round = 1").collect())
-    gaps = {round(b - a, 3) for a, b in zip(offs2, offs2[1:])}
-    assert min(gaps) < 200.0  # full budget, not halved
 
 
 def _assert_matches_oracle(state, oracle):

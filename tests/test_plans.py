@@ -79,20 +79,37 @@ def test_text_analysis_is_jvm_only(spark):
 
 def test_fetch_join_broadcasts_batch_not_store(spark, pages_df):
     """The page store (the 100 TB side) must stream through a broadcast
-    hash join — never shuffle, never broadcast itself."""
+    hash join — never shuffle, never broadcast itself: store mode's
+    lookup broadcasts the batch's urls into a semi-join over the store,
+    then broadcasts only the matching pages into the batch's left join."""
     from crawler_seo_spark.config import CrawlConfig
     from crawler_seo_spark.engine import CrawlEngine
     from crawler_seo_spark.sources.synthetic_site import SEED_URL
     eng = CrawlEngine(spark, pages_df, CrawlConfig(
         seed_url=SEED_URL, max_urls=10, batch_size=5))
-    frontier, _, _ = eng._seed_frontier()
+    frontier = eng._seed_frontier().frontier
     batch = frontier.limit(5).withColumn("crawl_seq", F.lit(0).cast("long")) \
         .withColumn("round", F.lit(0))
     from crawler_seo_spark.operators.politeness import schedule_fetches
     batch = schedule_fetches(batch, 10.0)
-    p = plan(eng._fetch(batch))
+    p = plan(eng._store_lookup(batch))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+    # walk down from each BroadcastExchange through its single-child
+    # operators: reaching the store scan (the only scan with page_index)
+    # before a join means the store itself is broadcast
+    lines = p.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        for child in lines[i + 1:]:
+            if depth(child) <= depth(line) or "Join" in child:
+                break
+            assert not ("Scan" in child and "page_index" in child), p
 
 
 def test_lsh_band_join_shuffles_only_band_keys(spark):

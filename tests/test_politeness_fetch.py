@@ -196,11 +196,16 @@ def test_live_robots_fetch_gates_admission(spark):
 def test_live_mode_matches_store_mode(spark):
     """LIVE mode (pages=None + deterministic fetch kernel) must reproduce
     the store-join crawl EXACTLY — same order, same status codes, same
-    seen set — since both are views of the same origin function."""
+    seen set — since both are views of the same origin function. That
+    includes a stored page with null html and a url missing from the
+    store."""
+    import hashlib
+
     import pandas as pd
 
     from crawler_seo_spark.config import CrawlConfig
     from crawler_seo_spark.engine import CrawlEngine
+    from crawler_seo_spark.sources.fetch import miss_response
     from crawler_seo_spark.sources.from_documents import (
         SEED_URL,
         live_fetch_factory,
@@ -210,6 +215,11 @@ def test_live_mode_matches_store_mode(spark):
 
     n = 150
     rows = [page_from_document(i, synthetic_text(i), n) for i in range(n)]
+    # the seed links to pages 1 and 2: page 1 is a 200 page whose stored
+    # html is null, page 2 is missing from the store (a network 404)
+    null_html, missing = rows[1]["url"], rows[2]["url"]
+    rows[1]["html"] = None
+    del rows[2]
     pages = spark.createDataFrame(pd.DataFrame(rows), schema=(
         "url string, page_index long, status_code int, content_type string, "
         "final_url string, response_time_ms double, content_length long, "
@@ -217,9 +227,18 @@ def test_live_mode_matches_store_mode(spark):
     cfg = CrawlConfig(seed_url=SEED_URL, max_urls=60, batch_size=15,
                       requests_per_second=1e9)
 
+    def origin():
+        inner = live_fetch_factory(n)()
+
+        def fetch(url):
+            if url == missing:
+                return miss_response(url)
+            return dict(inner(url), html=None) if url == null_html \
+                else inner(url)
+        return fetch
+
     st_store = CrawlEngine(spark, pages, cfg).run()
-    st_live = CrawlEngine(spark, None, cfg,
-                          fetch_fn_factory=live_fetch_factory(n)).run()
+    st_live = CrawlEngine(spark, None, cfg, fetch_fn_factory=origin).run()
 
     a = [tuple(r) for r in st_store.crawl_order.orderBy("crawl_seq")
          .collect()]
@@ -231,6 +250,9 @@ def test_live_mode_matches_store_mode(spark):
     sb = {(r["url"], r["status_code"], r["content_md5"])
           for r in st_live.results.collect()}
     assert sa == sb
+    got = {u: (c, m) for u, c, m in sa}
+    assert got[null_html] == (200, hashlib.md5(b"").hexdigest())
+    assert got[missing] == (404, hashlib.md5(b"").hexdigest())
     assert (sorted(r["url"] for r in st_store.seen.collect())
             == sorted(r["url"] for r in st_live.seen.collect()))
 
