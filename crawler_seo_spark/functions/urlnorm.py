@@ -13,11 +13,11 @@ function (:func:`canonicalize_url`) used by
 Both sides share bytes via ``urllib.parse``, which pins down the
 ``urlencode`` quirks (space → ``+``, ``~`` quoting, etc.).
 
-Relevance filtering (reference: ``core/url_manager.py:139-198``) is exposed
-twice: a pure function returning the filter *reason* (for the ``filtered``
-log and the oracle) and Spark ``Column`` builders that push the same
-predicates into Catalyst (JVM-side regex, no Python) for the report/query
-path.
+Relevance filtering (reference: ``core/url_manager.py:139-198``) is a pure
+function returning the filter *reason* (for the ``filtered`` log and the
+oracle). Priority classification is exposed twice: the pure
+:func:`is_priority` (oracle, seeds) and :func:`is_priority_col`, the same
+predicate as a Catalyst expression for the engine's frontier ordering.
 """
 
 from __future__ import annotations
@@ -262,38 +262,14 @@ def filter_reason_series(urls: pd.Series) -> pd.Series:
 def _contains_any(col: Column, patterns: list[str]) -> Column:
     out = F.lit(False)
     for p in patterns:
-        out = out | F.lower(col).contains(p.lower())
+        out = out | F.lower(col).contains(p)
     return out
 
 
-def ecommerce_blocked_col(url: Column) -> Column:
-    """F3 as a Catalyst expression (whole-stage-codegen'd)."""
-    return _contains_any(url, ECOMMERCE_PATTERNS)
-
-
-def extension_blocked_col(url: Column) -> Column:
-    """F4: blocked file extensions via one anchored regex."""
-    alts = "|".join(re.escape(e[1:]) for e in EXCLUDED_EXTENSIONS)
-    return F.lower(url).rlike(rf"\.({alts})$")
-
-
-def technical_blocked_col(url: Column) -> Column:
-    """F5 as a Catalyst expression."""
-    return _contains_any(url, TECHNICAL_PATTERNS)
-
-
-def filter_reason_col(url: Column) -> Column:
-    """Reason column (NULL = crawlable) — same precedence as
-    :func:`filter_reason`, evaluated JVM-side."""
-    return (
-        F.when(ecommerce_blocked_col(url), F.lit(REASON_ECOMMERCE))
-        .when(extension_blocked_col(url), F.lit(REASON_EXTENSION))
-        .when(technical_blocked_col(url), F.lit(REASON_TECHNICAL))
-    )
-
-
 def is_priority_col(url: Column, patterns: list[str] | None = None) -> Column:
-    """O2 priority classification as a Catalyst expression."""
+    """O2 priority classification as a Catalyst expression — the same
+    predicate as :func:`is_priority`: the url is lowercased, the patterns
+    are matched as given."""
     return _contains_any(url, patterns or PRIORITY_PATTERNS)
 
 

@@ -49,7 +49,8 @@ def test_synthetic_quick_end_to_end(tmp_path):
 def test_package_is_zip_importable(tmp_path):
     """spark-submit ships the package as a --py-files zip (scripts/
     submit.sh); every module must import from inside the archive — no
-    __file__-relative data loads, no namespace-package surprises."""
+    __file__-relative data loads, no namespace-package surprises, and no
+    module-level import of a module that no longer exists."""
     import zipfile
     from pathlib import Path
 
@@ -58,16 +59,18 @@ def test_package_is_zip_importable(tmp_path):
         for p in sorted((Path(REPO) / "crawler_seo_spark").rglob("*.py")):
             z.write(p, p.relative_to(REPO).as_posix())
     probe = (
-        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "import importlib, pkgutil, sys; sys.path.insert(0, sys.argv[1])\n"
         "import crawler_seo_spark\n"
         "assert 'crawler_seo_spark.zip' in crawler_seo_spark.__file__, "
         "crawler_seo_spark.__file__\n"
-        "from crawler_seo_spark.config import CrawlConfig\n"
-        "from crawler_seo_spark.functions.urlnorm import canonicalize_url\n"
-        "from crawler_seo_spark.engine import CrawlEngine\n"
-        "from crawler_seo_spark.operators import bloom, cuckoo, dedup\n"
-        "from crawler_seo_spark.plans import driver_queries\n"
-        "print('zip-import-ok')\n"
+        "def fail(name): raise ImportError(name)\n"
+        "names = [m.name for m in pkgutil.walk_packages(\n"
+        "    crawler_seo_spark.__path__, 'crawler_seo_spark.', fail)]\n"
+        "for name in names:\n"
+        "    mod = importlib.import_module(name)\n"
+        "    assert 'crawler_seo_spark.zip' in mod.__file__, mod.__file__\n"
+        "assert 'crawler_seo_spark.engine' in names, names\n"
+        "print('zip-import-ok', len(names))\n"
     )
     out = subprocess.run([sys.executable, "-c", probe, str(zip_path)],
                          capture_output=True, text=True, timeout=120,
