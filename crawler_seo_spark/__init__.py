@@ -12,7 +12,8 @@ reference crawler (``GuilhermeAquino92/crawler_seo``) on Apache Spark:
   Arrow-vectorized column pipelines,
 * snapshot-per-round checkpoint/resume with an Iceberg-shaped MERGE INTO,
 * an image+caption payload path (decode/validate via pandas UDFs),
-* the enriched results table and its report tabs as Catalyst-native
+* the enriched results table and its report tabs, plus corpus operators
+  (dedup families, similarity search, text quality), as Catalyst-native
   DataFrame plans.
 
 Everything here derives from public knowledge only: the PySpark API and the

@@ -57,7 +57,7 @@ def normalized_text_col(text: Column) -> Column:
     a maximal run becomes exactly one space — so the historical second
     pass ``\\s+ → " "`` could only ever see single spaces and was a
     provable identity. Dropping it halves the regex cost of every
-    normalization consumer (minhash/simhash/fingerprint/span/decontam);
+    normalization consumer (minhash/simhash/fingerprint/span);
     output is byte-identical (property-tested against the two-pass form)
     and the DuckDB oracle's two-pass SQL keeps matching for the same
     reason."""

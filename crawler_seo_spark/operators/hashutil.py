@@ -1,10 +1,8 @@
 """Shared 64-bit hashing primitives for the numpy kernels.
 
-One definition for the polynomial base and the finalizer keeps the
-rolling-window fingerprints (:mod:`.paragraph`) and the n-gram keys
-(:mod:`.decontam`) aligned — both rely on the low bits being uniform for
-mod-selection / join-key distribution, and a drift between copies would
-silently change one family's sampling density.
+One definition for the polynomial base, its inverse and the finalizer
+used by the rolling-window fingerprints (:mod:`.paragraph`), which rely on
+the low bits being uniform for mod-selection.
 """
 
 from __future__ import annotations

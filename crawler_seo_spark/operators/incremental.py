@@ -178,7 +178,7 @@ class _IncrementalIndex:
         (upstream URL-seen filtering guarantees it in the crawl
         pipeline); duplicate ids would pair with their earlier selves,
         surfacing — not corrupting — the violation. ``extra_counters``
-        rides the commit (e.g. the streaming ingest records its epoch for
+        rides the commit (e.g. a micro-batch caller records its epoch for
         replay idempotency).
 
         With a ``writer_id`` on the store, a writer that loses the commit
@@ -206,7 +206,7 @@ class _IncrementalIndex:
                      round_id: int) -> DataFrame:
         """Re-derive the candidate pairs a COMMITTED ingest round
         produced, without touching the index — the idempotent-replay path
-        (e.g. a restarted streaming epoch whose pairs write never
+        (e.g. a restarted micro-batch epoch whose pairs write never
         completed). The round's delta rows are its snapshot's data dirs
         minus the parent snapshot's."""
         delta = self.store.snapshot_delta(self.table, round_id)

@@ -13,8 +13,6 @@ Deterministic, no RNG: every page is a pure function of its document row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from ..sources.fetch import miss_response
 from ..sources.synthetic_site import BASE, DOMAIN
 
@@ -155,72 +153,12 @@ def live_fetch_factory(n_docs: int, text_fn=synthetic_text):
     return factory
 
 
-def widen_small_input(df: DataFrame, min_ratio: int = 2,
-                      min_bytes: int = 1 << 20) -> DataFrame:
-    """Repartition ``df`` to the session's default parallelism when its
-    current partitioning would leave most cores idle.
-
-    The documents table arrives as ONE small parquet file with a single
-    row group, and Spark assigns a row group to exactly one scan task —
-    so the per-page build downstream of ``read.parquet`` would run on 1-2
-    cores. The target is derived from the live session, never a
-    constant, so on a real cluster where inputs arrive in hundreds of
-    file splits this is a plan-time no-op (no exchange added).
-
-    Two gates, both derived from the input rather than tuned constants:
-
-    * ``min_bytes`` — below ~1 MiB of estimated input (logical-plan
-      statistics: file bytes for scans, no job) the round-robin
-      exchange's fixed cost rivals the whole computation, so the plan
-      is left alone; above it, single-task serialization of a row-group
-      -bound file dominates and widening wins.
-    * ``min_ratio`` — only widen when ``partitions * min_ratio <=
-      target`` (2× headroom so an already-reasonable layout is never
-      reshuffled).
-
-    The partition-count probe (``df.rdd.getNumPartitions()``) is only
-    safe on exchange-free plans: with AQE, converting a plan that
-    contains exchanges/subqueries to an RDD materializes its query
-    stages — real shuffle/broadcast jobs before the actual action. Such
-    plans are left untouched (their own exchanges already redistribute
-    work); the single-task pathology this helper fixes lives in narrow
-    scan chains, which plan without an adaptive root and probe for free
-    (file-split metadata only, no job).
-
-    Round-robin repartition is retry-deterministic (Spark sorts before
-    round-robin, SPARK-23207), and the page build is per-row, so row
-    order is not significant.
-    """
-    try:
-        spark = df.sparkSession
-        target = spark.sparkContext.defaultParallelism
-        qe = df._jdf.queryExecution()
-        size = int(qe.optimizedPlan().stats().sizeInBytes())
-        if size < min_bytes:
-            return df
-        if size > (1 << 50):
-            # sentinel/unknown statistics (e.g. LogicalRDD reports
-            # spark.sql.defaultSizeInBytes = Long.MaxValue): we cannot
-            # tell a tiny checkpoint from a petabyte input — leave the
-            # plan alone rather than widen blind (the measured
-            # single-task pathology lives in FILE scans, whose stats
-            # are real file bytes)
-            return df
-        if qe.executedPlan().getClass().getSimpleName() \
-                == "AdaptiveSparkPlanExec":
-            return df  # has exchanges — probing would run its stages
-        n = df.rdd.getNumPartitions()
-    except Exception:  # streaming frames / exotic plans: leave untouched
-        return df
-    if n * min_ratio <= target:
-        return df.repartition(target)
-    return df
-
-
 def pages_df_from_documents(spark, sf_dir: str, limit: int | None = None):
     """documents.parquet → page-store DataFrame (distributed derivation via
     mapInPandas — the per-page build never leaves the executors)."""
     import pandas as pd
+
+    from ..operators.partitioning import widen_small_input
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()

@@ -14,8 +14,8 @@ strong scaling honestly at this box size):
 
   W1  parse+analyze — the crawl engine's per-round hot path: Arrow-batched
       HTML parse + analyzer UDF over heavy derived pages.
-  W4  image validation — executor-side generate + decode/PSNR/phash/caption
-      checks (images validated/sec).
+  W2  minhash signatures — per-row compute (JVM hashing + numpy k-min).
+  W2b LSH band join — the dedup shuffle.
   W3  crawl rounds — the full BFS engine in LIVE-fetch mode: every page is
       materialized on the executors by the deterministic origin function
       (sources/from_documents.live_fetch_factory), the production
@@ -111,6 +111,22 @@ def run_suite(cores: int) -> dict[str, float]:
                          "analysis.headings_problematicos_count")
          .write.format("noop").mode("overwrite").save())
     timings["w1_parse_analyze"] = best_of(2, w1)
+
+    # W2: minhash + LSH pairs
+    from crawler_seo_spark.operators.dedup import (
+        lsh_candidate_pairs, minhash_signatures)
+    sig_holder = {}
+
+    def w2():
+        sig_holder["sigs"] = minhash_signatures(
+            docs, k=32, shingle_mode="word", shingle_n=3,
+            hash_mode="xxhash64").localCheckpoint()
+    timings["w2_minhash_sigs"] = best_of(2, w2)
+
+    def w2b():
+        lsh_candidate_pairs(sig_holder["sigs"], bands=8) \
+            .write.format("noop").mode("overwrite").save()
+    timings["w2b_lsh_join"] = best_of(2, w2b)
 
     # W4: image validation (north-rule metric: images validated/sec) —
     # executor-side generate + decode/PSNR/phash/caption validation
@@ -304,7 +320,8 @@ def main() -> None:
     k_ceiling = kernel_ceiling()
     r_small = _suite_subprocess(N_SMALL)
     r_big = _suite_subprocess(N_BIG)
-    phases = ["w1_parse_analyze", "w4_images_validate", "w3_crawl_rounds"]
+    phases = ["w1_parse_analyze", "w2_minhash_sigs", "w2b_lsh_join",
+              "w4_images_validate", "w3_crawl_rounds"]
     total_s = sum(r_small[p] for p in phases)
     total_b = sum(r_big[p] for p in phases)
     ratio = N_BIG // N_SMALL

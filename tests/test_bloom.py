@@ -87,3 +87,41 @@ def test_rebroadcast_only_changed_shards(spark):
     probed = ShardedBloom.with_hashes(first).withColumn(
         "_maybe", bloom.maybe_seen_col(spark)(F.col("_bh1"), F.col("_bh2")))
     assert probed.filter(~F.col("_maybe")).count() == 0
+
+
+def test_ivf_assign_collects_only_centroids(spark, monkeypatch):
+    """ivf_assign's only driver materialization is the ≤n_lists centroid
+    rows (round 1 collected every corpus id — O(corpus) driver memory)."""
+    try:  # Spark 4 concrete class overrides the pyspark.sql.DataFrame ABC
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:  # pragma: no cover - Spark 3
+        from pyspark.sql import DataFrame
+
+    from crawler_seo_spark.operators import similarity
+
+    corpus = spark.range(500).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") * (i + 1) % 17).cast("float")
+                  for i in range(8)]).alias("embedding"),
+    ).localCheckpoint(eager=True)
+
+    collected_sizes = []
+    orig_collect = DataFrame.collect
+
+    def counting_collect(self):
+        rows = orig_collect(self)
+        collected_sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    monkeypatch.setattr(DataFrame, "count",
+                        lambda self: (_ for _ in ()).throw(
+                            AssertionError("ivf_assign must not count()")))
+    assigned, cents = similarity.ivf_assign(corpus, n_lists=8)
+    assert collected_sizes and max(collected_sizes) <= 8
+    assert len(cents) == 8
+    monkeypatch.undo()
+    # assignment still covers the corpus and lists are within range
+    lists = assigned.select("ivf_list").distinct().collect()
+    assert all(0 <= r["ivf_list"] < 8 for r in lists)
+    assert assigned.count() == 500

@@ -100,34 +100,3 @@ def test_recrawl_invalidation_flow(spark):
     expected = {f"https://ex.test/u/{i}" for i in range(20)}
     assert expected <= admitted | set()  # all changed urls re-admitted
     assert len(admitted - expected) == 0  # and nothing else
-
-
-def test_recrawl_cache_cycle(spark, pages_df):
-    """Crawl → cache → mutate store → crawl → detect changes."""
-    from crawler_seo_spark.config import CrawlConfig
-    from crawler_seo_spark.engine import CrawlEngine
-    from crawler_seo_spark.operators.recrawl import (
-        content_cache, detect_changes, recrawl_frontier)
-    from crawler_seo_spark.sources.synthetic_site import SEED_URL
-
-    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=30, batch_size=15)
-    s1 = CrawlEngine(spark, pages_df, cfg).run()
-    cache1 = content_cache(s1.results).localCheckpoint(eager=True)
-
-    mutated = pages_df.withColumn(
-        "html",
-        F.when(F.col("page_index") % 4 == 1,
-               F.concat(F.col("html"), F.lit("<!-- edited -->")))
-        .otherwise(F.col("html")))
-    s2 = CrawlEngine(spark, mutated, cfg).run()
-    cache2 = content_cache(s2.results)
-
-    ch = detect_changes(cache1, cache2)
-    by = {r["change_status"]: 0 for r in ch.collect()}
-    for r in ch.collect():
-        by[r["change_status"]] += 1
-    assert by.get("CHANGED", 0) > 0
-    assert by.get("UNCHANGED", 0) > 0
-    assert by.get("NEW", 0) == 0 and by.get("GONE", 0) == 0  # same crawl set
-    rf = recrawl_frontier(ch).collect()
-    assert all(r["change_status"] == "CHANGED" for r in rf)

@@ -1,8 +1,7 @@
-"""Oracle parity on the documents-derived site, and the input widening
-that lets its single-file documents table build pages at full width."""
+"""Oracle parity on the documents-derived site — the corpus the CLI's
+``--from-documents`` crawl and the benchmarks run on."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from crawler_seo_spark.config import CrawlConfig
 from crawler_seo_spark.engine import CrawlEngine
@@ -50,53 +49,3 @@ def test_derived_site_deterministic(spark, doc_pages):
     b = [r["url"] for r in CrawlEngine(spark, doc_pages, cfg).run()
          .crawl_order.orderBy("crawl_seq").collect()]
     assert a == b
-
-
-def test_widen_small_input_widens_narrow_scan(spark, tmp_path):
-    from crawler_seo_spark.sources.from_documents import widen_small_input
-    p = str(tmp_path / "tiny.parquet")
-    spark.range(1000).withColumn("t", F.lit("x")).coalesce(1) \
-        .write.parquet(p)
-    df = spark.read.parquet(p)
-    assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    # min_bytes lowered: the point here is the partition logic, the
-    # size gate has its own test below
-    wide = widen_small_input(df, min_bytes=1)
-    assert (wide.rdd.getNumPartitions()
-            == spark.sparkContext.defaultParallelism)
-    assert wide.count() == 1000
-
-
-def test_widen_small_input_size_gate(spark, tmp_path):
-    """Sub-min_bytes inputs keep their plan (the exchange's fixed cost
-    rivals the whole computation there), and unknown-stats plans
-    (checkpoint scans report the Long.MaxValue sentinel) are never
-    widened blind."""
-    from crawler_seo_spark.sources.from_documents import widen_small_input
-    p = str(tmp_path / "tiny2.parquet")
-    spark.range(1000).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)          # a few KB << 1 MiB default gate
-    assert widen_small_input(df) is df
-    ck = spark.range(1000).coalesce(1).localCheckpoint(eager=True)
-    assert widen_small_input(ck) is ck  # unknown stats -> untouched
-
-
-def test_widen_small_input_noop_on_wide_input(spark):
-    from crawler_seo_spark.sources.from_documents import widen_small_input
-    n = spark.sparkContext.defaultParallelism
-    df = spark.range(1000, numPartitions=n)
-    # already at target parallelism: the SAME plan comes back (no
-    # exchange inserted)
-    assert widen_small_input(df) is df
-
-
-def test_widen_small_input_skips_exchange_bearing_plans(spark):
-    """Plans with exchanges (adaptive root) must be left untouched: the
-    partition-count probe would materialize their query stages."""
-    from crawler_seo_spark.sources.from_documents import widen_small_input
-    # big enough that the size gate passes and the adaptive-root guard
-    # is what declines (range stats are 8 B/row)
-    a = spark.range(2_000_000).withColumnRenamed("id", "k")
-    b = spark.range(2_000_000).withColumnRenamed("id", "k")
-    joined = a.join(b, "k")
-    assert widen_small_input(joined) is joined

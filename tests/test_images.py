@@ -1,10 +1,7 @@
 """Image payload invariants (BASELINE input_hint): decoded-pixel allclose
-(PSNR ≥ 40 dB for lossy formats), caption equality, phash equality; and the
-multimodal operators over them (decode/validate/resize, frame sampling,
-caption validation against a crawl)."""
+(PSNR ≥ 40 dB for lossy formats), caption equality, phash equality."""
 
 import numpy as np
-import pytest
 
 from crawler_seo_spark.sources.images import (
     ahash64,
@@ -62,96 +59,3 @@ def test_unknown_format_raises():
     import pytest
     with pytest.raises(NotImplementedError):
         encode_image(np.zeros((4, 4, 3), dtype=np.uint8), "avif")
-
-
-def test_multimodal_decode_validate_resize(spark):
-    from crawler_seo_spark.operators.multimodal import (
-        decode_images, resize_images, validate_images)
-    from crawler_seo_spark.sources.images import generate_images
-    rows = generate_images(24)
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, w int, h int, fmt string, "
-              "caption string, phash long")
-    dec = decode_images(df).collect()
-    assert all(r["ok"] for r in dec)
-    val = validate_images(df).collect()
-    assert all(r["decode_ok"] and r["pixels_ok"] and r["phash_ok"]
-               and r["caption_ok"] for r in val)
-    res = resize_images(df, 16, 16).collect()
-    assert all(r["w"] == 16 and r["h"] == 16 for r in res)
-    # corrupt payload does not kill the job
-    bad = spark.createDataFrame(
-        [("img-bad", b"\x00\x01junk", 4, 4, "png", "x", 0)],
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long")
-    dbad = decode_images(bad).collect()
-    assert dbad[0]["ok"] is False and dbad[0]["err"]
-
-
-def test_frame_sample_probe_raises_without_ffmpeg(spark):
-    """frame_sample is EXPERIMENTAL behind an ffmpeg probe: the operator
-    contract (schema) is stable, and without the ffmpeg CLI the task
-    raises instead of silently returning wrong/empty frames."""
-    import shutil
-
-    import pytest as _pt
-
-    from crawler_seo_spark.operators.multimodal import frame_sample
-    from crawler_seo_spark.sources.images import generate_images
-    df = spark.createDataFrame(
-        generate_images(2),
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long")
-    out = frame_sample(df)
-    assert out.schema.simpleString() == \
-        "struct<image_id:string,frame_no:int,bytes:binary>"
-    if shutil.which("ffmpeg") is None:
-        with _pt.raises(Exception, match="(?i)ffmpeg|NotImplemented"):
-            out.collect()
-    else:  # pragma: no cover - container has no ffmpeg
-        out.collect()  # real kernel path: must not raise
-
-
-@pytest.mark.skipif(__import__("shutil").which("ffmpeg") is None,
-                    reason="ffmpeg CLI not available in this container")
-def test_frame_sample_real_kernel(spark):  # pragma: no cover
-    """With ffmpeg present: every_n-th frames come back as fixed-size
-    rgb24 payloads with original frame indices."""
-    import subprocess
-    import tempfile
-
-    from crawler_seo_spark.operators.multimodal import frame_sample
-    path = tempfile.mktemp(suffix=".mp4")
-    subprocess.run(["ffmpeg", "-v", "error", "-f", "lavfi",
-                    "-i", "testsrc=duration=2:size=64x64:rate=30",
-                    path], check=True)
-    with open(path, "rb") as f:
-        payload = f.read()
-    df = spark.createDataFrame([("vid-0", payload, "mp4")],
-                               "image_id string, bytes binary, fmt string")
-    rows = frame_sample(df, every_n=30, width=8, height=8).collect()
-    assert len(rows) == 2  # 60 frames, every 30th
-    assert [r["frame_no"] for r in sorted(rows, key=lambda r: r["frame_no"])] \
-        == [0, 30]
-    assert all(len(r["bytes"]) == 8 * 8 * 3 for r in rows)
-
-
-def test_caption_validation_against_crawl(spark, pages_df, small_site):
-    """Crawled pages' embedded image refs validate row-for-row against the
-    image+caption table (alt text == caption)."""
-    from crawler_seo_spark.config import CrawlConfig
-    from crawler_seo_spark.engine import CrawlEngine
-    from crawler_seo_spark.operators.multimodal import caption_validation
-    from crawler_seo_spark.sources.images import generate_images
-    from crawler_seo_spark.sources.synthetic_site import SEED_URL
-
-    images = spark.createDataFrame(
-        generate_images(60),
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long")
-    state = CrawlEngine(spark, pages_df, CrawlConfig(
-        seed_url=SEED_URL, max_urls=40, batch_size=20)).run()
-    val = caption_validation(state.results, images).collect()
-    assert len(val) > 0
-    assert all(r["known_image"] for r in val)
-    assert all(r["caption_ok"] for r in val)

@@ -334,25 +334,3 @@ def test_embedding_multiprobe_recall(spark, tmp_path):
     # sizing rule: planes_for targets corpus/2^planes ≈ target_bucket
     assert EmbeddingIndex.planes_for(10**9, 4096) == 18
     assert EmbeddingIndex.planes_for(100, 4096) == 1
-
-
-def test_expire_snapshots_reclaims_superseded_dirs(spark, tmp_path):
-    """expire_snapshots: after compaction, historical per-round lists
-    below the horizon are dropped and their now-unreferenced delta dirs
-    deleted; the current snapshot (compact base + recent deltas) and
-    everything it references survive, and reads are unchanged."""
-    import os
-
-    store = SnapshotStore(str(tmp_path / "sigidx"))
-    idx = SignatureIndex(store, **KW, compact_every=10)
-    for r in range(20):
-        idx.ingest(spark, _docs(spark, range(r * 4, (r + 1) * 4)))
-    last = store.manifest()["round"]
-    keep = set(store._snapshot_dirs("signatures", last))
-    deleted = store.expire_snapshots("signatures", before_round=15)
-    assert deleted  # some superseded delta dirs actually reclaimed
-    assert not (keep & set(deleted))
-    # current snapshot fully readable, bit-for-bit complete
-    assert idx.signatures(spark).count() == 80
-    # replay still works above the horizon, and is gone below it
-    assert idx.replay_pairs(spark, 16).count() >= 2

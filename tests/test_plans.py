@@ -4,6 +4,8 @@ counts, no Python in JVM-only pipelines."""
 
 from pyspark.sql import functions as F
 
+SF = "/root/testdata/sf0.001"
+
 
 def plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -24,6 +26,25 @@ def test_enrich_has_no_python(spark, pages_df):
                    "MapInPandas"):
         assert marker not in p, marker
     assert "Window" in p  # the duplicate-flag windows
+
+
+def test_text_analysis_is_jvm_only(spark):
+    from crawler_seo_spark.operators.text import with_text_analysis
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = with_text_analysis(docs)
+    p = plan(out)
+    assert "Python" not in p and "Pandas" not in p
+    # '*(n)' marks whole-stage-codegen'd operators. r6 adds one
+    # input-widening round-robin exchange ahead of the projection (a
+    # tiny single-file scan otherwise runs the regex-heavy projection
+    # in one task — operators/partitioning.py), which makes the plan
+    # ADAPTIVE; AQE's pre-execution string hides the codegen markers,
+    # so execute THIS DataFrame's own query (collect finalizes its
+    # AdaptiveSparkPlan) and assert on the final plan.
+    out.collect()
+    p_final = plan(out)
+    assert "Python" not in p_final and "Pandas" not in p_final
+    assert "*(" in p_final, p_final[:200]
 
 
 def test_fetch_join_broadcasts_batch_not_store(spark, pages_df):
@@ -59,6 +80,22 @@ def test_fetch_join_broadcasts_batch_not_store(spark, pages_df):
             if depth(child) <= depth(line) or "Join" in child:
                 break
             assert not ("Scan" in child and "page_index" in child), p
+
+
+def test_lsh_band_join_shuffles_only_band_keys(spark):
+    """The LSH band self-join must not carry the signature arrays through
+    the exchange — only (id, band, band_key)."""
+    from crawler_seo_spark.operators.dedup import (
+        lsh_candidate_pairs, minhash_signatures)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sigs = minhash_signatures(docs, k=8).localCheckpoint(eager=True)
+    p = plan(lsh_candidate_pairs(sigs, bands=4))
+    # every shuffle exchange moves only (id, band, band_key) — the signature
+    # array is projected away before data crosses the wire
+    exchanges = [ln for ln in p.splitlines() if "Exchange" in ln]
+    assert exchanges, p
+    for ln in exchanges:
+        assert "signature" not in ln, ln
 
 
 def test_salted_repartition_pins_partition_count(spark):

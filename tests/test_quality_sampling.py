@@ -34,36 +34,6 @@ def test_gopher_flags_each_rule(spark):
         assert not out[i]["keep"], i
 
 
-def test_sample_mix_deterministic_and_monotone(spark):
-    from crawler_seo_spark.operators.sampling import sample_corpus_mix
-
-    corpus = spark.range(0, 4000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("s"), (F.col("id") % 2).cast("string"))
-        .alias("source"))
-
-    def ids(w0, w1, salt="mix-v1"):
-        weights = spark.createDataFrame(
-            [("s0", w0), ("s1", w1)], "source string, rate double")
-        return {r["doc_id"] for r in sample_corpus_mix(
-            corpus, weights, group_col="source", salt=salt).collect()}
-
-    half = ids(0.5, 0.2)
-    assert ids(0.5, 0.2) == half                 # deterministic
-    bigger = ids(0.8, 0.2)
-    assert half <= bigger                        # monotone in rate
-    assert ids(0.5, 0.0) == {i for i in half if i % 2 == 0}  # stratum off
-
-    # rates land near targets (2000 docs/stratum, ±5 pp)
-    n0 = sum(1 for i in half if i % 2 == 0)
-    n1 = sum(1 for i in half if i % 2 == 1)
-    assert abs(n0 / 2000 - 0.5) < 0.05
-    assert abs(n1 / 2000 - 0.2) < 0.05
-
-    # a different salt draws a genuinely different sample
-    assert ids(0.5, 0.2, salt="mix-v2") != half
-
-
 def test_pii_scrub_tokens_and_counts(spark):
     from crawler_seo_spark.operators.text import scrub_pii
     df = spark.createDataFrame(

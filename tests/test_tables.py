@@ -118,3 +118,93 @@ def test_round_id_parsing_past_5_digits(spark, tmp_path):
     open(os.path.join(store.root, "rounds", "r100000.commit"), "w").close()
     assert store.recover_incomplete() == [100000]
     assert store.manifest()["round"] == 0
+
+
+def test_await_round_bridges_marker_manifest_window(spark, tmp_path):
+    """A loser that hits ConcurrentCommitError while the winner is between
+    marker claim and manifest publish must WAIT for the manifest, not read
+    None and misdiagnose; a marker with no forthcoming manifest (crashed
+    run) times out to None."""
+    import os
+    import threading
+    import time as _t
+
+    store = SnapshotStore(str(tmp_path / "store"))
+    os.makedirs(os.path.join(store.root, "rounds"))
+    # orphan: marker only, nobody will publish
+    open(store._round_marker(0), "w").close()
+    assert store.await_round(0, timeout=0.3) is None
+
+    def late_publish():
+        _t.sleep(0.3)
+        st2 = SnapshotStore(store.root)
+        st2.write("frontier", _frontier(spark, range(2)), 0)
+        # marker exists (the "winner claimed it"); publish manifest only
+        import json
+        with open(store._manifest_path + ".tmp", "w") as f:
+            json.dump({"round": 0, "counters": {}}, f)
+        os.replace(store._manifest_path + ".tmp", store._manifest_path)
+
+    th = threading.Thread(target=late_publish)
+    th.start()
+    assert store.await_round(0, timeout=5.0) == 0
+    th.join()
+
+
+def test_stale_staged_state_swept_on_reopen(spark, tmp_path):
+    """A writer that crashed mid-round leaves staged file-lists on disk;
+    reopening with the same writer_id must drop them (else reads prefer
+    the stale staged list over a peer's committed snapshot and bake dead
+    data into future lineage). Committed writer-scoped dirs survive: the
+    shared file-list references them."""
+    import os
+
+    root = str(tmp_path / "store")
+    w = SnapshotStore(root, writer_id="wa")
+    w.write("frontier", _frontier(spark, range(3)), 0)
+    w.commit_round(0, {"n": 3})  # committed: shared json -> wa-scoped dir
+
+    w.write("frontier", _frontier(spark, range(3, 6)), 1)  # staged, no commit
+    staged = w._staged_snap_path("frontier", 1)
+    staged_dir = w._table_dir("frontier", 1)
+    assert os.path.exists(staged) and os.path.isdir(staged_dir)
+    del w  # "crash"
+
+    w2 = SnapshotStore(root, writer_id="wa")  # reopen sweeps
+    assert not os.path.exists(staged)
+    assert not os.path.isdir(staged_dir)
+    # committed round fully intact
+    assert w2.read(spark, "frontier", 0).count() == 3
+    assert w2.manifest()["round"] == 0
+
+
+def test_sweep_spares_committed_dirs_referenced_by_staged_lists(spark,
+                                                                tmp_path):
+    """ADVICE r4: a crashed writer's staged APPEND file-list references
+    its parent snapshot's dirs too — including legacy full-rewrite dirs
+    with no protecting .files.json. The sweep must only delete dirs this
+    writer created (basename carries the '.writer_id' suffix), never the
+    committed data the staged list happens to reference."""
+    import os
+
+    root = str(tmp_path / "store")
+    # legacy committed round: anonymous writer, unscoped dir, and strip
+    # the file-list to simulate a pre-file-list snapshot
+    anon = SnapshotStore(root)
+    anon.write("idx", _frontier(spark, range(4)), 0)
+    anon.commit_round(0, {"n": 4})
+    os.remove(anon._snap_path("idx", 0))  # legacy: dir only, no json
+    legacy_dir = os.path.join(root, "idx", "r00000")
+    assert os.path.isdir(legacy_dir)
+
+    # writer wa stages an append on top of the legacy snapshot, crashes
+    w = SnapshotStore(root, writer_id="wa")
+    w.append("idx", _frontier(spark, range(4, 6)), 1, parent_round=0)
+    staged_dir = w._table_dir("idx", 1)
+    assert os.path.isdir(staged_dir)
+    del w  # crash before commit
+
+    SnapshotStore(root, writer_id="wa")  # reopen sweeps
+    assert os.path.isdir(legacy_dir)        # committed data SURVIVES
+    assert not os.path.isdir(staged_dir)    # writer-scoped delta swept
+    assert SnapshotStore(root).read(spark, "idx", 0).count() == 4

@@ -385,47 +385,6 @@ def test_recrawl_cache_cycle(spark, pages_df):
     assert all(r["change_status"] == "CHANGED" for r in rf)
 
 
-def test_pagerank_properties(spark):
-    """PageRank sanity: ranks sum to 1, hub nodes outrank leaves, matches a
-    numpy power-iteration reference."""
-    import numpy as np
-    from crawler_seo_spark.operators.graph import pagerank
-    edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)]  # 2 is the hub
-    e = spark.createDataFrame(edges, "src long, dst long")
-    out = {r["node"]: r["rank"] for r in pagerank(e, n_iters=20).collect()}
-    assert abs(sum(out.values()) - 1.0) < 1e-6
-    assert out[2] == max(out.values())
-    assert out[3] == min(out.values())
-    # numpy reference (same formulation)
-    n, d = 4, 0.85
-    adj = {0: [1, 2], 1: [2], 2: [0], 3: [2]}
-    r = np.full(n, 1.0 / n)
-    for _ in range(20):
-        new = np.full(n, (1 - d) / n)
-        dangling = sum(r[u] for u in range(n) if u not in adj)
-        for u, vs in adj.items():
-            for v in vs:
-                new[v] += d * r[u] / len(vs)
-        new += d * dangling / n
-        r = new
-    for i in range(n):
-        assert abs(out[i] - r[i]) < 1e-9, i
-
-
-def test_crawl_edges_to_pagerank(spark, pages_df):
-    from crawler_seo_spark.config import CrawlConfig
-    from crawler_seo_spark.engine import CrawlEngine
-    from crawler_seo_spark.operators.graph import crawl_edges, pagerank
-    from crawler_seo_spark.sources.synthetic_site import SEED_URL
-    state = CrawlEngine(spark, pages_df, CrawlConfig(
-        seed_url=SEED_URL, max_urls=30, batch_size=15)).run()
-    edges = crawl_edges(state.results)
-    assert edges.count() > 0
-    ranks = pagerank(edges, n_iters=5)
-    assert ranks.count() > 0
-    assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-6
-
-
 def test_hamming_near_dup_pairs(spark):
     """Planted 64-bit fingerprint clusters: ids sharing a base hash with
     ≤2 flipped bits pair up; distinct bases never pair (image-axis phash
