@@ -186,8 +186,8 @@ class CrawlConfig:
     # Activation = seen ≥ bloom_min_seen AND seen ≥ ratio × batch;
     # 0 disables the ratio term (tests force the filter path with it).
     bloom_seen_batch_ratio: float = 8.0
-    # Candidate counts at or above this use the distributed prefix-sum
-    # sequence assignment instead of a single-task window.
+    # Dequeue budgets at or above this rank the frontier with the
+    # distributed prefix-sum instead of TakeOrdered + a single-task window.
     seq_window_threshold: int = 200_000
     # Compact (checkpoint) the lazily-unioned seen set every K rounds.
     seen_compact_every: int = 8

@@ -21,7 +21,8 @@ and the next round's Bloom probe need (SURVEY §3, north-star design)::
       admit        candidate links (posexplode → within-round first
                    occurrence), Bloom probe + exact anti-join vs seen
                    (J1), robots
-      number       deterministic discovery_seq assignment
+      number       discovery_seq = ((parent_seq + 1) << 20) | link_pos,
+                   one eager pin that also counts the new links
       merge        in-memory frontier/seen MERGE (lazy unions over pins)
       JOIN 2       the previous round's snapshot publish
     background tail (overlaps the next round's dequeue and fetch_parse)
@@ -35,9 +36,9 @@ The driver loop is the only imperative control flow (BFS round barriers are
 batch-synchronous by nature — reference: core/crawler.py:61-93). Crawl order
 is reproduced EXACTLY: dequeue key ``(priority DESC, discovery_seq ASC)``
 replays the reference's two-deque FIFO (core/url_manager.py:386-404), and
-``discovery_seq`` is derived from deterministic inputs — (parent crawl_seq,
-link position on the page) within each round — never from
-``monotonically_increasing_id`` or timing.
+``discovery_seq`` packs deterministic inputs — the parent's crawl_seq and
+the link's position on the page — never ``monotonically_increasing_id`` or
+timing.
 """
 
 from __future__ import annotations
@@ -58,6 +59,7 @@ from .functions.urlnorm import base_domain_of, is_priority_col
 from .operators.bloom import ShardedBloom
 from .operators.politeness import schedule_fetches
 from .operators.robots import filter_allowed, robots_table
+from .operators.sequence import LINK_BITS
 from .sources.fetch import make_http_fetch, miss_response, paced_rows
 from .tables import SnapshotStore
 
@@ -98,7 +100,6 @@ class LoopState:
     seen: DataFrame
     round_id: int
     results_count: int
-    next_discovery_seq: int
     frontier_count: int
     seen_count: int
     results_parts: list[DataFrame] = field(default_factory=list)
@@ -206,6 +207,11 @@ class CrawlEngine:
                 prios.append(1 if self.config.smart else 0)
         if not seeds:
             raise ValueError("no admissible seed URLs")
+        # seeds are parent_seq = -1: their discovery_seq is their position,
+        # which must stay below every discovered link's key
+        if len(seeds) >= 1 << LINK_BITS:
+            raise ValueError(f"{len(seeds)} seed URLs; discovery_seq holds "
+                             f"fewer than {1 << LINK_BITS}")
         # built from pandas, so the rows cross to the JVM as Arrow batches:
         # pinning 400 seeds took a median 417 ms from a Python-list
         # createDataFrame and 106 ms this way (local[3], 4-core VM)
@@ -221,13 +227,25 @@ class CrawlEngine:
             SEEN_SCHEMA)
         return LoopState(frontier=frontier.localCheckpoint(eager=True),
                          seen=seen.localCheckpoint(eager=True), round_id=0,
-                         results_count=0, next_discovery_seq=n,
-                         frontier_count=n, seen_count=n)
+                         results_count=0, frontier_count=n, seen_count=n)
 
     def _load_committed_state(self, manifest: dict) -> LoopState:
         """Resume: rebuild the loop state from the manifest's committed
         round."""
         last, c = manifest["round"], manifest["counters"]
+        # A checkpoint written while discovery_seq was a dense rank carries
+        # its next value. Every old key is below that counter and was
+        # ranked in (parent_seq, link_pos) order from parents that precede
+        # every new one, so while the counter is at most 2^LINK_BITS (the
+        # smallest key of a discovered link) the old frontier sorts exactly
+        # as the arithmetic key would have. Beyond that, keys would mix.
+        old_next = c.get("next_discovery_seq")
+        if old_next is not None and old_next > 1 << LINK_BITS:
+            raise ValueError(
+                f"checkpoint {self.config.checkpoint_dir} numbers its "
+                f"frontier up to {old_next}, past {1 << LINK_BITS}: the "
+                "current discovery_seq cannot continue it; restart without "
+                "resume")
         frontier = self.store.read(self.spark, "frontier", last) \
             .localCheckpoint(eager=True)
         seen = self.store.read(self.spark, "seen", last) \
@@ -253,7 +271,6 @@ class CrawlEngine:
                 F.col("crawl_delay").isNotNull()).count()
         return LoopState(frontier=frontier, seen=seen, round_id=last + 1,
                          results_count=c["results_total"],
-                         next_discovery_seq=c["next_discovery_seq"],
                          frontier_count=c["frontier_after"],
                          seen_count=c["seen_total"],
                          results_parts=results_parts,
@@ -303,11 +320,11 @@ class CrawlEngine:
         """O1/O3: the round's batch (with crawl_seq and round), plus the
         post-dequeue frontier when the big path yields it for free.
 
-        Small budgets: TakeOrderedAndProject + one-task window (the merge
-        task holds ≤ budget rows). Large budgets: the same total order via
-        the distributed prefix-sum — rank the frontier in (priority DESC,
-        discovery_seq ASC) order with no single reducer, take rank <
-        budget. Identical batch either way."""
+        ``seq_window_threshold`` picks the path. Small budgets:
+        TakeOrderedAndProject + one-task window over ≤ budget rows. Large
+        budgets: the same total order via the distributed prefix-sum — rank
+        the frontier in (priority DESC, discovery_seq ASC) order with no
+        single reducer, take rank < budget. Identical batch either way."""
         dequeue_order = [F.desc("priority"), F.asc("discovery_seq")]
         if budget >= self.config.seq_window_threshold:
             from .operators.sequence import global_sequence
@@ -600,53 +617,20 @@ class CrawlEngine:
                 new_links, self._robots_dynamic.select("host", "rules"))
         return filter_allowed(new_links, self.robots)
 
-    def _number(self, new_links: DataFrame, s: LoopState,
-                batch_count: int) -> tuple[DataFrame, int]:
+    def _number(self, new_links: DataFrame,
+                s: LoopState) -> tuple[DataFrame, int]:
         """Deterministic discovery_seq: the new frontier rows and their
         count.
 
-        Sequence = rank in (parent_seq, link_pos) order. Small rounds use
-        a window (one task, cheap); large rounds use the distributed
-        prefix-sum construction (repartitionByRange + per-partition
-        offsets, operators/sequence.py) — a global window would funnel
-        millions of candidates through a single reducer at the 10^10
-        design point."""
+        Each new url keeps its first (parent_seq, link_pos), and parent_seq
+        grows strictly across rounds, so packing the pair into one long
+        (operators/sequence.py) sorts every url exactly as the reference's
+        FIFO. One code path at every round size: no shuffle, no global
+        window, one eager pin whose observation yields the count."""
+        from .operators.sequence import global_sequence_arith
         cfg = self.config
-        order_cols = [F.asc("parent_seq"), F.asc("link_pos")]
-        new_links = new_links.select("url", "parent_seq", "link_pos",
-                                     "parent_depth")
-        if batch_count >= cfg.seq_window_threshold:
-            # big-round regime (dequeue size is the cheap proxy for the
-            # candidate count): ONE pinned prefix-sum pass both numbers the
-            # links and yields the enqueue count — no separate checkpoint
-            # or count job. parent_seq is contiguous in
-            # [results_count, results_count + batch_count), so the
-            # order-monotone bucket is pure arithmetic — no
-            # repartitionByRange sampling job, which would re-evaluate the
-            # whole explode→dedup→prune pipeline a second time. 4× buckets
-            # per partition so hash placement stays balanced.
-            from .operators.sequence import global_sequence_arith
-            n_buckets = 4 * self.n_parts
-            pid = F.floor(
-                (F.col("parent_seq") - F.lit(s.results_count).cast("long"))
-                * F.lit(n_buckets) / F.lit(batch_count))
-            numbered, enqueued = global_sequence_arith(
-                new_links, pid, order_cols, "discovery_seq",
-                start=s.next_discovery_seq, num_partitions=self.n_parts,
-                with_total=True)
-        else:
-            # small rounds: checkpoint + observed count + one-task window
-            from pyspark.sql import Observation
-            obs = Observation()  # auto-named: unique across rounds/runs
-            new_links = (new_links
-                         .observe(obs, F.count(F.lit(1)).alias("n"))
-                         .localCheckpoint(eager=True))
-            enqueued = int(obs.get["n"])
-            seq_w = Window.orderBy(*order_cols)
-            numbered = new_links.withColumn(
-                "discovery_seq",
-                F.row_number().over(seq_w).cast("long") - 1
-                + F.lit(s.next_discovery_seq).cast("long"))
+        numbered, enqueued = global_sequence_arith(
+            new_links.select("url", "parent_seq", "link_pos", "parent_depth"))
         new_frontier = (
             numbered
             .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
@@ -709,7 +693,6 @@ class CrawlEngine:
         s.results_parts.append(result)
         s.filtered_parts.append(self._filtered_from(result))
         s.results_count += batch_count
-        s.next_discovery_seq += enqueued
         s.frontier_count += enqueued - batch_count
         s.seen_count += enqueued
         return new_seen
@@ -832,7 +815,7 @@ class CrawlEngine:
 
             new_links = self._admit(fetched, s.seen, bloom_active, s.round_id)
             t_prune = time.monotonic()
-            new_frontier, enqueued = self._number(new_links, s, batch_count)
+            new_frontier, enqueued = self._number(new_links, s)
             t_seq = time.monotonic()
             new_seen = self._merge(s, fetched, result, undequeued,
                                    new_frontier, batch_count, enqueued)
@@ -846,7 +829,6 @@ class CrawlEngine:
                 "round": s.round_id, "dequeued": batch_count,
                 "enqueued": enqueued, "frontier_after": s.frontier_count,
                 "results_total": s.results_count, "seen_total": s.seen_count,
-                "next_discovery_seq": s.next_discovery_seq,
                 "bloom_active": bloom_active,
                 # filter size at this round's probe
                 "bloom_inserted": self.bloom.n_inserted,

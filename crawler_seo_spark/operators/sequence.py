@@ -1,11 +1,10 @@
-"""Deterministic, shuffle-friendly global sequence assignment.
+"""Deterministic global sequence assignment for the crawl's two orders.
 
-The crawl order and the frontier's ``discovery_seq`` are *total orders* —
-the hardest thing to produce scalably on a cluster. The naive
-``row_number() OVER (ORDER BY ...)`` plans as a single-partition window: one
-reducer sees every row, which dies at 10^10 scale.
+The dequeue rank and the frontier's ``discovery_seq`` are *total orders*.
+The naive ``row_number() OVER (ORDER BY ...)`` plans as a single-partition
+window: one reducer sees every row, which dies at 10^10 scale.
 
-:func:`global_sequence` produces the identical numbering with no single
+:func:`global_sequence` ranks by an arbitrary sort key with no single
 reducer and no Python round-trip: range-repartition on the sort key, sort
 within partitions, pin the partitioning (localCheckpoint — range sampling
 must not re-run between passes), count rows per partition (a tiny
@@ -16,12 +15,21 @@ the standard distributed prefix-sum construction (the shape Spark uses
 internally for ``zipWithIndex``) — but expressed in DataFrame ops so rows
 stay in Tungsten format end to end (the round-1 version went through
 ``df.rdd.zipWithIndex``, which pickles every row to Python and back).
+
+:func:`global_sequence_arith` needs no rank at all: ``discovery_seq`` only
+has to sort like ``(parent_seq, link_pos)``, so it packs the pair into one
+long — a column expression, not a pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+# discovery_seq = ((parent_seq + 1) << LINK_BITS) | link_pos: a page may
+# carry up to 2^20 links, and the parent field keeps the key below 2^62
+LINK_BITS = 20
+PARENT_LIMIT = 1 << (62 - LINK_BITS)
 
 
 def global_sequence(df: DataFrame, order_by: list[Column], out_col: str,
@@ -74,65 +82,35 @@ def global_sequence(df: DataFrame, order_by: list[Column], out_col: str,
     return (out, acc - start) if with_total else out
 
 
-def global_sequence_arith(df: DataFrame, pid: Column,
-                          order_by: list[Column], out_col: str,
-                          start: int = 0,
-                          num_partitions: int | None = None,
-                          with_total: bool = False):
-    """Prefix-sum sequence like :func:`global_sequence`, but the partition
-    id is computed by ARITHMETIC instead of ``repartitionByRange``.
+def global_sequence_arith(df: DataFrame, out_col: str = "discovery_seq"):
+    """Number new links by arithmetic: add ``out_col`` =
+    ``((parent_seq + 1) << LINK_BITS) | link_pos`` and pin the result.
 
-    ``repartitionByRange`` must first run a range-boundary *sampling job*,
-    which re-evaluates the whole upstream plan once before the real
-    shuffle evaluates it again — ruinous when the input's lineage is an
-    expensive pipeline (explode → dedup → filter-probe). When the sort key
-    is arithmetically mappable to a balanced, order-monotone bucket (e.g.
-    a contiguous ``parent_seq`` range), the caller passes that bucket as
-    ``pid`` and the sampling pass disappears: one hash shuffle on ``pid``,
-    one checkpoint, one tiny count aggregate.
+    ``df`` holds each new link's first ``(parent_seq, link_pos)``, so the
+    key is unique and sorts exactly like that pair. ``parent_seq`` is the
+    parent's ``crawl_seq``, which grows strictly across rounds, so every
+    round's keys sort after every earlier round's; seeds are
+    ``parent_seq = -1`` and get ``0..n-1``. No shuffle, no window, no
+    driver offsets: one eager pin, whose observed count and maxima (the
+    overflow guards) ride the same job.
 
-    Correctness requirement on ``pid``: for any two rows a, b with
-    ``order_by(a) < order_by(b)``, ``pid(a) <= pid(b)`` — i.e. buckets
-    partition the total order into contiguous runs.
+    Returns ``(pinned, row_count)``. Raises ``ValueError`` when a key
+    would not fit: ``link_pos >= 2^LINK_BITS`` or
+    ``parent_seq >= 2^(62 - LINK_BITS)``.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    arranged = (
-        df.withColumn("_pid", pid.cast("int"))
-          .repartition(n, "_pid")
-          .localCheckpoint(eager=True)
-    )
-    counts = sorted(
-        (r["_pid"], r["n"])
-        for r in arranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-        .collect())
-    if not counts:
-        empty = (arranged.drop("_pid")
-                 .withColumn(out_col, F.lit(start).cast("long")))
-        return (empty, 0) if with_total else empty
-    offsets, acc = {}, start
-    for p, c in counts:
-        offsets[p] = acc
-        acc += c
-    off_expr = F.coalesce(
-        F.element_at(
-            F.map_from_arrays(
-                F.array(*[F.lit(p) for p in offsets]),
-                F.array(*[F.lit(o).cast("long") for o in offsets.values()])),
-            F.col("_pid")),
-        F.lit(0).cast("long"))
-    w = Window.partitionBy("_pid").orderBy(*order_by)
-    out = (arranged
-           .withColumn(out_col,
-                       F.row_number().over(w).cast("long") - 1 + off_expr)
-           .drop("_pid"))
-    return (out, acc - start) if with_total else out
-
-
-def global_sequence_small(df: DataFrame, order_by: list[Column], out_col: str,
-                          start: int = 0) -> DataFrame:
-    """Window-based variant for *small* inputs (a dequeued batch): a single
-    round's batch fits one task comfortably; the window avoids the extra
-    repartition pass. Use :func:`global_sequence` for unbounded inputs."""
-    w = Window.orderBy(*order_by)
-    num = F.row_number().over(w).cast("long") - 1 + F.lit(start).cast("long")
-    return df.withColumn(out_col, num)
+    obs = Observation()  # auto-named: unique across rounds/runs
+    key = F.shiftleft(F.col("parent_seq").cast("long") + 1, LINK_BITS) \
+        .bitwiseOR(F.col("link_pos").cast("long"))
+    pinned = (df.withColumn(out_col, key)
+              .observe(obs, F.count(F.lit(1)).alias("n"),
+                       F.max("link_pos").alias("max_link"),
+                       F.max("parent_seq").alias("max_parent"))
+              .localCheckpoint(eager=True))
+    got = obs.get
+    if (got["max_link"] or 0) >= 1 << LINK_BITS:
+        raise ValueError(f"link_pos {got['max_link']} does not fit the "
+                         f"{LINK_BITS}-bit link field of discovery_seq")
+    if (got["max_parent"] or 0) >= PARENT_LIMIT:
+        raise ValueError(f"parent_seq {got['max_parent']} does not fit "
+                         f"discovery_seq (limit {PARENT_LIMIT})")
+    return pinned, int(got["n"])

@@ -58,11 +58,12 @@ def get_spark(app_name: str = "crawler_seo_spark", cores: int | None = None,
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Silence ONLY WindowExec's single-partition warning: the engine GATES
-    # every global window on seq_window_threshold (small rounds/driver
-    # queries use the one-task window BY DESIGN; big inputs take the
-    # distributed prefix-sum), so these warnings are expected noise that
-    # buries real regressions in bench output. Global log level stays WARN.
+    # Silence ONLY WindowExec's single-partition warning: the one global
+    # window left is the small dequeue's crawl_seq window over at most
+    # `budget` rows, BY DESIGN (seq_window_threshold sends bigger budgets
+    # to the distributed prefix-sum), so these warnings are expected noise
+    # that buries real regressions in bench output. Global log level stays
+    # WARN.
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(

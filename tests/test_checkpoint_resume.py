@@ -50,6 +50,71 @@ def test_resume_bit_identical(spark, pages_df):
     assert resumed.rounds[0]["round"] == kill_at + 1
 
 
+def _rewrite_as_dense_rank_checkpoint(spark, ckpt, counter=None):
+    """Roll ``ckpt`` back to its middle round and rewrite that round the
+    way checkpoints were written while discovery_seq was a dense rank:
+    the frontier's keys ranked 0..k-1 in their order, and the manifest
+    counters carrying ``next_discovery_seq`` (``seen_total`` unless
+    ``counter`` is given)."""
+    import json
+    import os
+
+    from crawler_seo_spark.engine import FRONTIER_SCHEMA
+    store = SnapshotStore(ckpt)
+    mid = store.manifest()["round"] // 2
+    store.rollback(mid)
+    rows = sorted(store.read(spark, "frontier", mid).collect(),
+                  key=lambda r: r["discovery_seq"])
+    dense = [tuple(i if f == "discovery_seq" else r[f]
+                   for f in FRONTIER_SCHEMA.fieldNames())
+             for i, r in enumerate(rows)]
+    store.write("frontier", spark.createDataFrame(dense, FRONTIER_SCHEMA),
+                mid)
+    path = os.path.join(ckpt, "_manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    counters = manifest["counters"]
+    counters["next_discovery_seq"] = (counters["seen_total"]
+                                      if counter is None else counter)
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    return mid
+
+
+def test_resume_dense_rank_checkpoint_exact(spark, pages_df):
+    """A checkpoint from before discovery_seq was packed arithmetically
+    (dense-rank keys, a next_discovery_seq counter) resumes to the same
+    crawl as the uninterrupted run: its keys all sort below every newly
+    packed key, in the same order."""
+    ckpt = tempfile.mkdtemp(prefix="dense_ckpt_")
+    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=60, batch_size=15,
+                      checkpoint_dir=ckpt)
+    full = CrawlEngine(spark, pages_df, cfg).run()
+    assert SnapshotStore(ckpt).manifest()["round"] >= 2
+    mid = _rewrite_as_dense_rank_checkpoint(spark, ckpt)
+
+    resumed = CrawlEngine(spark, pages_df, cfg).run(resume=True)
+    assert resumed.rounds[0]["round"] == mid + 1
+    assert _order(resumed) == _order(full)
+    assert {r["url"] for r in resumed.seen.collect()} \
+        == {r["url"] for r in full.seen.collect()}
+    got_f = sorted((r["url"], r["reason"]) for r in resumed.filtered.collect())
+    want_f = sorted((r["url"], r["reason"]) for r in full.filtered.collect())
+    assert got_f == want_f
+
+
+def test_resume_dense_rank_checkpoint_past_key_range_raises(spark, pages_df):
+    """An old checkpoint whose dense keys reach the packed keys' range
+    cannot be continued without mixing the two: resume refuses it."""
+    ckpt = tempfile.mkdtemp(prefix="dense_big_ckpt_")
+    cfg = CrawlConfig(seed_url=SEED_URL, max_urls=15, batch_size=5,
+                      checkpoint_dir=ckpt)
+    CrawlEngine(spark, pages_df, cfg).run()
+    _rewrite_as_dense_rank_checkpoint(spark, ckpt, counter=2**20 + 1)
+    with pytest.raises(ValueError, match="restart without resume"):
+        CrawlEngine(spark, pages_df, cfg).run(resume=True)
+
+
 def test_resume_without_manifest_starts_fresh(spark, pages_df):
     ckpt = tempfile.mkdtemp(prefix="fresh_ckpt_")
     cfg = CrawlConfig(seed_url=SEED_URL, max_urls=10, batch_size=5,

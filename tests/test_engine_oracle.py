@@ -109,8 +109,8 @@ def test_cuckoo_filter_path_exact(spark, small_site, pages_df):
 
 
 def test_distributed_sequence_exact(spark, small_site, pages_df):
-    """seq_window_threshold=0 forces the distributed prefix-sum sequence
-    assignment on every round — crawl order must stay exact."""
+    """seq_window_threshold=0 forces the distributed prefix-sum dequeue
+    on every round — crawl order must stay exact."""
     oracle, engine = _run_both(spark, small_site, pages_df,
                                max_urls=80, batch_size=20, smart=True,
                                seq_window_threshold=0)

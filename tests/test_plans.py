@@ -2,6 +2,7 @@
 ``explain()`` output — broadcast joins for small sides, pinned partition
 counts, no Python in JVM-only pipelines."""
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -125,16 +126,30 @@ def test_sequence_no_int32_wrap(spark):
     wrapped negative before the cast)."""
     import pyspark.sql.functions as F
 
-    from crawler_seo_spark.operators.sequence import (
-        global_sequence,
-        global_sequence_small,
-    )
+    from crawler_seo_spark.operators.sequence import global_sequence
     start = 2**31 - 3
     df = spark.range(10).select(F.col("id").alias("k"))
     big, total = global_sequence(df, [F.asc("k")], "seq", start=start,
                                  with_total=True)
     vals = [r["seq"] for r in big.orderBy("k").collect()]
     assert vals == list(range(start, start + 10)) and total == 10
-    small = global_sequence_small(df, [F.asc("k")], "seq", start=start)
-    assert [r["seq"] for r in small.orderBy("k").collect()] \
-        == list(range(start, start + 10))
+
+
+def test_discovery_seq_key_edges(spark):
+    """The packed discovery_seq sorts exactly like (parent_seq, link_pos)
+    at the edges of both fields — seeds (parent_seq = -1), the largest
+    link position, parent_seq past 2^31 and the largest parent — and a
+    pair that does not fit raises instead of wrapping."""
+    from crawler_seo_spark.operators.sequence import global_sequence_arith
+    schema = "parent_seq long, link_pos int"
+    rows = [(-1, 0), (-1, 7), (0, 2**20 - 1), (1, 0), (2**31, 5),
+            (2**42 - 1, 2**20 - 1)]
+    numbered, count = global_sequence_arith(
+        spark.createDataFrame(rows, schema))
+    assert count == len(rows)
+    got = [(r["parent_seq"], r["link_pos"]) for r in
+           numbered.orderBy("discovery_seq").collect()]
+    assert got == sorted(rows)
+    for bad in [(0, 2**20), (2**42, 0)]:
+        with pytest.raises(ValueError):
+            global_sequence_arith(spark.createDataFrame([bad], schema))
